@@ -37,6 +37,9 @@ _IMPORT_SEC = time.perf_counter() - _T_IMPORT0
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+# pinned, not sized from the host (session.py::_driver_mem), so
+# bench numbers stay comparable with the recorded rounds
+os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
 
 # Recorded baseline: BENCH_r01.json / BASELINE.md "Recorded baseline" —
 # 16 headline queries at sf0.1 on local[32]. Newly-benched queries are

@@ -57,7 +57,8 @@ def train_centroids(
 ) -> list[list[float]]:
     """K-means centroids via MLlib — the INDEX BUILD, a driver-coordinated
     job run once and amortized (never inside a query plan; persist the
-    result with save_centroids and load it at query time).
+    result with sources/warehouse.py::publish_json and load it at
+    query time).
 
     Samples by default: k-means quality needs ~``target_points`` ×
     n_centroids points, not the corpus — training on the full 100 TB base
@@ -188,99 +189,6 @@ def hash_sample_vectors(
             kept_vecs.extend(vecs[i] for i in idx)
     order = np.argsort(np.concatenate(kept_ids), kind="stable")
     return [kept_vecs[i] for i in order]
-
-
-def source_mtime(source: str) -> float:
-    """Freshness stamp for a parquet source that may be a single file or
-    a Spark-written directory (max over the directory's entries)."""
-    import os
-
-    if os.path.isdir(source):
-        entries = [
-            os.path.getmtime(os.path.join(source, f))
-            for f in os.listdir(source)
-        ]
-        return max(entries, default=os.path.getmtime(source))
-    return os.path.getmtime(source)
-
-
-def save_quantizer(
-    path: str,
-    centroids: list[list[float]],
-    *,
-    src: str,
-    src_mtime: float,
-    n_sample: int,
-) -> None:
-    """Persist a trained quantizer WITH its provenance (source path,
-    source mtime, sample size): load_quantizer refuses a stale or
-    cross-corpus artifact instead of silently serving it (the
-    basename-collision / fixture-regeneration hazard ADVICE r9 flagged
-    for the postings store applies to this index family too)."""
-    import json
-    import os
-
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(
-            {
-                "centroids": centroids,
-                "src": os.path.abspath(src),
-                "src_mtime": src_mtime,
-                "n_sample": n_sample,
-            },
-            f,
-        )
-    os.replace(tmp, path)  # atomic publish
-
-
-def load_quantizer(
-    path: str, *, src: str, src_mtime: float
-) -> list[list[float]] | None:
-    """Load a persisted quantizer iff it was trained on THIS source at
-    its current mtime; None (→ retrain) on miss, stale, or legacy
-    bare-list format."""
-    import json
-    import os
-
-    if not os.path.exists(path):
-        return None
-    try:
-        with open(path) as f:
-            art = json.load(f)
-    except (OSError, json.JSONDecodeError):
-        return None
-    if not isinstance(art, dict):
-        return None  # legacy bare-list artifact: retrain under new format
-    if art.get("src") != os.path.abspath(src):
-        return None
-    if art.get("src_mtime") != src_mtime:
-        return None
-    return art.get("centroids")
-
-
-def save_centroids(path: str, centroids: list[list[float]]) -> None:
-    """Persist a trained quantizer (tiny: k × dim floats) — the index
-    artifact queries load instead of re-training per run."""
-    import json
-    import os
-
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(centroids, f)
-    os.replace(tmp, path)  # atomic publish
-
-
-def load_centroids(path: str) -> list[list[float]] | None:
-    import json
-    import os
-
-    if not os.path.exists(path):
-        return None
-    with open(path) as f:
-        return json.load(f)
 
 
 def _dist_to(vec_col: Column, centroid: list[float]) -> Column:
@@ -452,7 +360,7 @@ def ivf_ann_join(
     arrow: bool | None = None,
 ) -> DataFrame:
     """Approximate KNN join through an IVF index. Pass prebuilt
-    ``centroids`` (load_centroids of a persisted index) to amortize the
+    ``centroids`` (a published index, publish_json) to amortize the
     index across queries — the intended production path; otherwise
     sample-trains on the base as a convenience (an index build runs
     inside the call). BOTH sides cut over from column expressions to

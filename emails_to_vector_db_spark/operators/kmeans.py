@@ -74,8 +74,8 @@ def lloyd_kmeans(
 ) -> list[list[float]]:
     """Run ``n_iter`` distributed Lloyd rounds from explicit initial
     centroids (deterministic by construction — pass a seeded sample).
-    Returns the final centroid list, ready to persist via
-    operators/ivf.py::save_centroids as a full-corpus-trained index."""
+    Returns the final centroid list, ready to publish via
+    sources/warehouse.py::publish_json as a full-corpus-trained index."""
     cents = [list(c) for c in init_centroids]
     for _ in range(n_iter):
         cents = lloyd_step(df, vec_col, cents)

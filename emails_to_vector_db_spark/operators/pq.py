@@ -18,8 +18,6 @@ oracle — the registered query loads an index, it never fits one.
 
 from __future__ import annotations
 
-import json
-import os
 
 Codebooks = list[list[list[float]]]  # [m][k][dim/m]
 
@@ -51,17 +49,3 @@ def train_pq_codebooks(
         for s in range(m)
     ]
 
-
-def save_codebooks(path: str, codebooks: Codebooks) -> None:
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(codebooks, f)
-    os.replace(tmp, path)
-
-
-def load_codebooks(path: str) -> Codebooks | None:
-    if not os.path.exists(path):
-        return None
-    with open(path) as f:
-        return json.load(f)

@@ -17,8 +17,6 @@ the (tiny) projection matrix exists:
 
 from __future__ import annotations
 
-import json
-import os
 from typing import Iterator, Sequence
 
 import numpy as np
@@ -126,24 +124,6 @@ def train_pca_numpy(
         [[round(float(c), 8) for c in comps[:, j]] for j in range(comps.shape[1])],
         [round(float(e), 8) for e in w],
     )
-
-
-def save_pca(path: str, mean, components, eigvals) -> None:
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(
-            {"mean": mean, "components": components, "eigvals": eigvals}, f
-        )
-    os.replace(tmp, path)
-
-
-def load_pca(path: str):
-    if not os.path.exists(path):
-        return None
-    with open(path) as f:
-        d = json.load(f)
-    return d["mean"], d["components"], d["eigvals"]
 
 
 def dot_literal(vec_col: Column | str, vec: Sequence[float]) -> Column:

@@ -28,30 +28,15 @@ Spark specifics this leans on (all public `DataFrameWriter.bucketBy` /
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from emails_to_vector_db_spark.plans.registry import register
 from emails_to_vector_db_spark.sources.tables import load_table, table_path
+from emails_to_vector_db_spark.sources.warehouse import publish_bucketed
 
 BUCKETS = 16
 _LAYOUT_VERSION = 1
-
-
-def _bucket_root(sf_dir: str, tbl: str) -> str:
-    root = os.path.dirname(os.path.dirname(os.path.dirname(__file__)))
-    sf = os.path.basename(sf_dir.rstrip("/"))
-    return os.path.join(
-        root, "spark-warehouse", f"bucketed_v{_LAYOUT_VERSION}", sf, tbl
-    )
-
-
-def _table_name(sf_dir: str, tbl: str) -> str:
-    sf = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    return f"bkt_{tbl}_{sf}"
 
 
 def ensure_bucketed_table(
@@ -61,62 +46,23 @@ def ensure_bucketed_table(
     key: str,
     n_buckets: int = BUCKETS,
 ) -> str:
-    """Land ``tbl`` bucketed+sorted by ``key`` (write-once per fixture
-    generation, mtime staleness guard) and make sure the current
-    session's catalog knows the bucket spec. Returns the catalog name.
+    """Land ``tbl`` bucketed+sorted by ``key`` (once per fixture
+    generation) and make sure the current session's catalog knows the
+    bucket spec. Returns the catalog name.
 
     The data shuffle happens only when the source fixture changed; a
     fresh session over fresh files replays only a CREATE TABLE — this is
     the once-per-ingest cost a production warehouse amortizes over every
     later join.
     """
-    name = _table_name(sf_dir, tbl)
-    path = _bucket_root(sf_dir, tbl)
-    marker = os.path.join(path, "_SOURCE_MTIME")
-    src_mtime = os.path.getmtime(table_path(sf_dir, tbl))
-    fresh = False
-    if os.path.exists(marker):
-        with open(marker) as f:
-            fresh = float(f.read().strip()) >= src_mtime
-
-    if spark.catalog.tableExists(name):
-        if fresh:
-            return name
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-
-    df = load_table(spark, sf_dir, tbl)
-    if not fresh:
-        shutil.rmtree(path, ignore_errors=True)
-        # repartition on the bucket key first → exactly ONE file per
-        # bucket. Spark only trusts SORTED BY when a bucket is a single
-        # file (multi-file buckets are only per-file sorted), so this is
-        # what lets the join elide the per-task Sort as well as the
-        # Exchange — and it avoids the small-files problem at the same
-        # time.
-        (
-            df.repartition(n_buckets, F.col(key))
-            .write.format("parquet")
-            .bucketBy(n_buckets, key)
-            .sortBy(key)
-            .option("path", path)
-            .mode("overwrite")
-            .saveAsTable(name)
-        )
-        with open(marker, "w") as f:
-            f.write(str(src_mtime))
-    else:
-        # files are current but this session's catalog has never seen
-        # them: re-register the external bucketed table — pure DDL, no
-        # data movement.
-        cols = ", ".join(
-            f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields
-        )
-        spark.sql(
-            f"CREATE TABLE {name} ({cols}) USING parquet "
-            f"CLUSTERED BY ({key}) SORTED BY ({key}) "
-            f"INTO {n_buckets} BUCKETS LOCATION '{path}'"
-        )
-    return name
+    return publish_bucketed(
+        spark,
+        f"bucketed_v{_LAYOUT_VERSION}_{tbl}",
+        [table_path(sf_dir, tbl)],
+        lambda _: load_table(spark, sf_dir, tbl),
+        key=key,
+        n_buckets=n_buckets,
+    )
 
 
 _COLOCATED_ORACLE = """

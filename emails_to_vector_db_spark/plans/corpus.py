@@ -33,7 +33,8 @@ from emails_to_vector_db_spark.plans.dedup import (
     _docs_with_chained_dups,
 )
 from emails_to_vector_db_spark.plans.registry import register
-from emails_to_vector_db_spark.sources.tables import load_table
+from emails_to_vector_db_spark.sources.tables import load_table, table_path
+from emails_to_vector_db_spark.sources.warehouse import publish_landing
 
 
 # LM model tables broadcast while they fit in executor/driver RAM;
@@ -579,52 +580,25 @@ _STREAM_DEDUP_VERSION = 1
 
 
 def _stream_dedup_landing(sf_dir: str) -> str:
-    """Land the exact-dup planted corpus (the exact_dedup_groups corpus)
-    as THREE parquet files in ascending doc_id order with increasing
-    mtimes — a deterministic micro-batch sequence for the file stream
-    source (which orders files by modification time, then path).
-    Write-once with the same source-mtime staleness guard as the format
-    copies."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
+    """The exact-dup planted corpus (the exact_dedup_groups corpus) as
+    THREE micro-batch files in ascending doc_id order, the planted
+    copies (doc_id + _DUP_OFFSET) after the originals
+    (sources/warehouse.py::publish_landing)."""
+    import pyarrow.compute as pc
 
     from emails_to_vector_db_spark.plans.dedup import _DUP_OFFSET, _N_PLANT
-
-    root = os.path.dirname(os.path.dirname(os.path.dirname(__file__)))
-    sf = os.path.basename(sf_dir.rstrip("/"))
-    d = os.path.join(
-        root, "spark-warehouse", f"stream_dedup_v{_STREAM_DEDUP_VERSION}", sf
-    )
-    src = os.path.join(sf_dir, "documents.parquet")
-    parts = [os.path.join(d, f"part{i}.parquet") for i in range(3)]
-    src_mtime = os.path.getmtime(src)
-    if all(
-        os.path.exists(p) and os.path.getmtime(p) >= src_mtime for p in parts
-    ):
-        return d
-    os.makedirs(d, exist_ok=True)
-    tbl = pq.read_table(src, columns=["doc_id", "text"])
-    ids, texts = tbl["doc_id"].to_pylist(), tbl["text"].to_pylist()
-    rows = sorted(zip(ids, texts)) + sorted(
-        (i + _DUP_OFFSET, t) for i, t in zip(ids, texts) if i < _N_PLANT
-    )
-    n = len(rows)
-    cuts = [0, n // 3, 2 * n // 3, n]
-    for i in range(3):
-        chunk = rows[cuts[i] : cuts[i + 1]]
-        pq.write_table(
-            pa.table(
-                {
-                    "doc_id": pa.array([r[0] for r in chunk], pa.int64()),
-                    "text": pa.array([r[1] for r in chunk], pa.string()),
-                }
-            ),
-            parts[i],
+    def planted(rows):
+        rows = rows.filter(pc.less(rows["doc_id"], _N_PLANT))
+        return rows.set_column(
+            0, "doc_id", pc.add(rows["doc_id"], _DUP_OFFSET)
         )
-        os.utime(parts[i], (src_mtime + i + 1, src_mtime + i + 1))
-    return d
+
+    return publish_landing(
+        f"stream_dedup_v{_STREAM_DEDUP_VERSION}",
+        table_path(sf_dir, "documents"),
+        ["doc_id", "text"],
+        planted=planted,
+    )
 
 
 def _stream_dedup_oracle() -> str:

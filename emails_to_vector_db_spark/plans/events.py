@@ -16,7 +16,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from emails_to_vector_db_spark.plans.registry import register
-from emails_to_vector_db_spark.sources.tables import load_table
+from emails_to_vector_db_spark.sources.tables import load_table, table_path
+from emails_to_vector_db_spark.sources.warehouse import publish_landing
 
 
 @contextlib.contextmanager
@@ -1079,61 +1080,15 @@ _STREAM_SPRT_BATCHES = 4
 
 
 def _stream_sprt_landing(sf_dir: str) -> str:
-    """Land (event_id, user_id, event_type) as FOUR parquet files in
-    ascending event_id order with increasing mtimes — the deterministic
-    micro-batch sequence of the _stream_dedup_landing convention, so
+    """(event_id, user_id, event_type) as FOUR micro-batch files in
+    ascending event_id order (sources/warehouse.py::publish_landing), so
     the DuckDB oracle can replay the batch boundaries exactly."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    root = os.path.dirname(os.path.dirname(os.path.dirname(__file__)))
-    sf = os.path.basename(sf_dir.rstrip("/"))
-    d = os.path.join(
-        root, "spark-warehouse", f"stream_sprt_v{_STREAM_SPRT_VERSION}", sf
+    return publish_landing(
+        f"stream_sprt_v{_STREAM_SPRT_VERSION}",
+        table_path(sf_dir, "events"),
+        ["event_id", "user_id", "event_type"],
+        n_parts=_STREAM_SPRT_BATCHES,
     )
-    src = os.path.join(sf_dir, "events.parquet")
-    nb = _STREAM_SPRT_BATCHES
-    parts = [os.path.join(d, f"part{i}.parquet") for i in range(nb)]
-    src_mtime = os.path.getmtime(src)
-    if all(
-        os.path.exists(p) and os.path.getmtime(p) >= src_mtime for p in parts
-    ):
-        return d
-    os.makedirs(d, exist_ok=True)
-    tbl = pq.read_table(
-        src, columns=["event_id", "user_id", "event_type"]
-    )
-    rows = sorted(
-        zip(
-            tbl["event_id"].to_pylist(),
-            tbl["user_id"].to_pylist(),
-            tbl["event_type"].to_pylist(),
-        )
-    )
-    n = len(rows)
-    cuts = [n * i // nb for i in range(nb + 1)]
-    for i in range(nb):
-        chunk = rows[cuts[i] : cuts[i + 1]]
-        pq.write_table(
-            pa.table(
-                {
-                    "event_id": pa.array(
-                        [r[0] for r in chunk], pa.int64()
-                    ),
-                    "user_id": pa.array(
-                        [r[1] for r in chunk], pa.int64()
-                    ),
-                    "event_type": pa.array(
-                        [r[2] for r in chunk], pa.string()
-                    ),
-                }
-            ),
-            parts[i],
-        )
-        os.utime(parts[i], (src_mtime + i + 1, src_mtime + i + 1))
-    return d
 
 
 _STREAM_SPRT_ORACLE = f"""

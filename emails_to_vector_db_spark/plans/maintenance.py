@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from emails_to_vector_db_spark.plans.registry import register
 from emails_to_vector_db_spark.sources.tables import load_table, table_path
+from emails_to_vector_db_spark.sources.warehouse import publish
 
 # ---------------------------------------------------------------------------
 # Incremental materialized-view refresh (delta-only aggregation maintenance)
@@ -38,16 +39,6 @@ GROUP BY o_orderpriority
 """
 
 
-def _mv_path(sf_dir: str) -> str:
-    import os
-
-    root = os.path.dirname(os.path.dirname(os.path.dirname(__file__)))
-    sf = os.path.basename(sf_dir.rstrip("/"))
-    return os.path.join(
-        root, "spark-warehouse", f"mv_orders_by_priority_v{_MV_VERSION}", sf
-    )
-
-
 def _mv_partials(df: DataFrame) -> DataFrame:
     """The decomposable partial-aggregate state the MV stores: count and
     RAW sum (rounding only at serve time keeps the merge algebra exact),
@@ -62,26 +53,21 @@ def _mv_partials(df: DataFrame) -> DataFrame:
 
 def _ensure_mv(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the base-period partial aggregates once per fixture
-    generation (source-mtime staleness guard, same pattern as the format
-    copies): the registered query then reads THIS parquet instead of
-    re-aggregating the base period."""
-    import os
+    generation (published under a fingerprint of orders.parquet, like
+    every warehouse artifact): the registered query then reads THIS
+    parquet instead of re-aggregating the base period."""
 
-    path = _mv_path(sf_dir)
-    src = table_path(sf_dir, "orders")
-    marker = os.path.join(path, "_SOURCE_MTIME")
-    src_mtime = os.path.getmtime(src)
-    if os.path.exists(marker):
-        with open(marker) as f:
-            if float(f.read().strip()) >= src_mtime:
-                return path
-    base = load_table(spark, sf_dir, "orders").where(
-        F.col("o_orderdate") < F.lit(_MV_CUTOFF).cast("timestamp")
+    def build(d: str) -> None:
+        base = load_table(spark, sf_dir, "orders").where(
+            F.col("o_orderdate") < F.lit(_MV_CUTOFF).cast("timestamp")
+        )
+        _mv_partials(base).coalesce(1).write.mode("overwrite").parquet(d)
+
+    return publish(
+        f"mv_orders_by_priority_v{_MV_VERSION}",
+        [table_path(sf_dir, "orders")],
+        build,
     )
-    _mv_partials(base).coalesce(1).write.mode("overwrite").parquet(path)
-    with open(marker, "w") as f:
-        f.write(str(src_mtime))
-    return path
 
 
 @register(
@@ -1001,45 +987,33 @@ def _ensure_fragmented_copy(sf_dir: str) -> str:
     """Write documents' doc_ids into a deliberately FRAGMENTED parquet
     directory (one file per log2 size class: part-01 has ~2 rows,
     part-09 ~256 — the geometric small-file spread ingest jobs leave
-    behind), staleness-guarded against fixture regeneration. File
-    membership is a pure doc_id formula, which is what lets the DuckDB
-    oracle recompute the identical plan from the documents VIEW while
-    the engine reads the actual files."""
+    behind), published once per fixture generation. File membership is
+    a pure doc_id formula, which is what lets the DuckDB oracle
+    recompute the identical plan from the documents VIEW while the
+    engine reads the actual files."""
+    import math
     import os
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    root = os.path.dirname(os.path.dirname(os.path.dirname(__file__)))
-    sf = os.path.basename(sf_dir.rstrip("/"))
-    d = os.path.join(
-        root, "spark-warehouse", f"fragments_v{_COMPACT_VERSION}", sf
-    )
-    src = os.path.join(sf_dir, "documents.parquet")
-    marker = os.path.join(d, "_DONE")
-    if os.path.exists(marker) and os.path.getmtime(marker) >= os.path.getmtime(src):
-        return d
-    import math
-    import shutil
+    src = table_path(sf_dir, "documents")
 
-    if os.path.exists(d):
-        shutil.rmtree(d)
-    os.makedirs(d, exist_ok=True)
-    ids = sorted(
-        pq.read_table(src, columns=["doc_id"])["doc_id"].to_pylist()
-    )
-    buckets: dict[int, list[int]] = {}
-    for i in ids:
-        b = min(_COMPACT_MAX_BUCKET, int(math.floor(math.log2(i + 2))))
-        buckets.setdefault(b, []).append(i)
-    for b, rows in buckets.items():
-        pq.write_table(
-            pa.table({"doc_id": pa.array(sorted(rows), pa.int64())}),
-            os.path.join(d, f"part-{b:02d}.parquet"),
+    def build(d: str) -> None:
+        ids = sorted(
+            pq.read_table(src, columns=["doc_id"])["doc_id"].to_pylist()
         )
-    with open(marker, "w") as f:
-        f.write("ok")
-    return d
+        buckets: dict[int, list[int]] = {}
+        for i in ids:
+            b = min(_COMPACT_MAX_BUCKET, int(math.floor(math.log2(i + 2))))
+            buckets.setdefault(b, []).append(i)
+        for b, rows in buckets.items():
+            pq.write_table(
+                pa.table({"doc_id": pa.array(sorted(rows), pa.int64())}),
+                os.path.join(d, f"part-{b:02d}.parquet"),
+            )
+
+    return publish(f"fragments_v{_COMPACT_VERSION}", [src], build)
 
 
 _COMPACT_ORACLE = f"""
@@ -1281,7 +1255,7 @@ def reembedding_migration_audit(
     arrive, and how far the space drifted (avg cosine old↔new). The
     upgrade is a deterministic cyclic-blend transform (so the DuckDB
     oracle replays it exactly); both assignments use the SAME persisted
-    quantizer (spark-warehouse/ivf_index/) because migration planning
+    published quantizer (_ivf_centroids) because migration planning
     runs against the index you have, not one you might retrain — lists
     with high churn are exactly the ivf_rebalance_plan inputs.
 

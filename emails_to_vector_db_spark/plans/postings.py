@@ -25,10 +25,12 @@ generation and persists it the way a real search engine does:
   integer < 2^53), so the literal is bit-identical to the inline
   ``F.avg`` / DuckDB ``avg`` regardless of partitioning.
 
-Freshness follows plans/bucketed.py: a ``_SOURCE_MTIME`` marker keyed
-to documents.parquet — the driver regenerates /root/testdata between
-rounds, and a stale index must rebuild, not silently serve old rows. A
-fresh session over fresh files replays only CREATE TABLE DDL.
+Freshness is the warehouse publish path (sources/warehouse.py): the
+store lives in a directory named by a fingerprint of documents.parquet
+(absolute path, mtime, size) and its catalog name carries the same
+fingerprint — a regenerated fixture names a new store and rebuilds,
+never silently serving old rows. A fresh session over current files
+replays only CREATE TABLE DDL.
 
 Doc-grain lookups (RM3's feedback-doc term distributions) deliberately
 do NOT read this store: postings are term-bucketed, so a doc_id probe
@@ -49,9 +51,12 @@ sibling its pgvector store implies.
 
 from __future__ import annotations
 
+import hashlib
 import json
+import math
 import os
-import shutil
+import sys
+from collections import Counter
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -87,86 +92,28 @@ from emails_to_vector_db_spark.plans.retrieval import (
     _pb_qterm_list,
     _pb_tail,
 )
-from emails_to_vector_db_spark.sources.tables import (
-    corpus_tag,
-    load_table,
-    table_path,
+from emails_to_vector_db_spark.sources.tables import load_table, table_path
+from emails_to_vector_db_spark.sources.warehouse import (
+    artifact_path,
+    publish,
+    publish_bucketed,
+    publish_landing,
+    superseded,
 )
 
-_PST_VERSION = 2  # v2: corpus-tagged roots + provenance-checked markers
+_PST_KIND = "postings_v2"
 _PST_BUCKETS = 16  # sized for the test fixtures; thousands at 100 TB
 
 
-def _pst_root(sf_dir: str) -> str:
-    # keyed by basename (readability) AND abspath hash (collision
-    # safety — r9 ADVICE: two corpora sharing a basename must not
-    # share a postings location)
-    root = os.path.dirname(os.path.dirname(os.path.dirname(__file__)))
-    sf = os.path.basename(sf_dir.rstrip("/"))
-    return os.path.join(
-        root,
-        "spark-warehouse",
-        f"postings_v{_PST_VERSION}",
-        f"{sf}_{corpus_tag(sf_dir)}",
-    )
-
-
-def _pst_table_name(sf_dir: str) -> str:
-    sf = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    return f"pst_documents_{sf}_{corpus_tag(sf_dir)}"
-
-
-def _marker_fresh(marker: str, src: str) -> bool:
-    """True iff the marker records THIS source (absolute path, not just
-    a compatible mtime) at an mtime >= the file's current one. A legacy
-    bare-float marker or a different source path reads as stale —
-    rebuild, never serve another corpus's postings."""
-    if not os.path.exists(marker):
-        return False
-    try:
-        with open(marker) as f:
-            rec = json.load(f)
-    except (OSError, ValueError):
-        return False
-    if not isinstance(rec, dict):
-        return False
-    return rec.get("src") == os.path.abspath(src) and float(
-        rec.get("mtime", -1.0)
-    ) >= os.path.getmtime(src)
-
-
-def _write_marker(marker: str, src: str) -> None:
-    with open(marker, "w") as f:
-        json.dump(
-            {
-                "src": os.path.abspath(src),
-                "mtime": os.path.getmtime(src),
-            },
-            f,
-        )
-
-
-def _data_present(path: str) -> bool:
-    """Guard for the pure-DDL catalog replay: after a partial warehouse
-    cleanup the CREATE TABLE would point at a missing LOCATION and
-    every store-reading twin would silently scan empty (r9 ADVICE) —
-    require the data directory to exist with at least one data file."""
-    if not os.path.isdir(path):
-        return False
-    return any(not f.startswith(("_", ".")) for f in os.listdir(path))
-
-
-def ensure_postings_index(
-    spark: SparkSession, sf_dir: str
-) -> tuple[str, int, float]:
-    """Land the documents postings index (write-once per fixture
-    generation, mtime staleness guard) and register it in the session
-    catalog. Returns ``(table_name, n_docs, avgdl)``.
+def _postings_store(spark: SparkSession, sf_dir: str) -> tuple[str, dict]:
+    """Publish the documents postings index and register it in the
+    session catalog. Returns ``(table_name, {"n_docs", "sum_dl"})``.
 
     Build = the ONE corpus-grain tokenize→explode→(term,doc) aggregate,
     then a single term-partitioned window pass that computes BOTH the
     document frequency and the impact rank (one shuffle does lexicon +
-    impact ordering), written bucketed by term.
+    impact ordering), written bucketed by term; the corpus stats ride in
+    a JSON sidecar beside the table.
     """
     # The driver's verify runs queries in its OWN vanilla session;
     # without this, Spark 4's DisableUnnecessaryBucketedScan silently
@@ -175,21 +122,9 @@ def ensure_postings_index(
     spark.conf.set(
         "spark.sql.sources.bucketing.autoBucketedScan.enabled", "false"
     )
-    name = _pst_table_name(sf_dir)
-    path = os.path.join(_pst_root(sf_dir), "postings")
-    marker = os.path.join(_pst_root(sf_dir), "_SOURCE_MTIME")
-    stats_path = os.path.join(_pst_root(sf_dir), "_STATS.json")
     src = table_path(sf_dir, "documents")
-    fresh = (
-        os.path.exists(stats_path)
-        and _marker_fresh(marker, src)
-        and _data_present(path)
-    )
 
-    if spark.catalog.tableExists(name) and not fresh:
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-
-    if not fresh:
+    def frame(d: str) -> DataFrame:
         docs = load_table(spark, sf_dir, "documents").select(
             "doc_id", "text"
         )
@@ -199,7 +134,11 @@ def ensure_postings_index(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum(F.size(TX.tokens("text"))).alias("sum_dl"),
         ).collect()[0]
-        n_docs, sum_dl = int(srow["n_docs"]), int(srow["sum_dl"])
+        with open(os.path.join(d, "stats.json"), "w") as f:
+            json.dump(
+                {"n_docs": int(srow["n_docs"]), "sum_dl": int(srow["sum_dl"])},
+                f,
+            )
         tf = (
             docs.select(
                 "doc_id",
@@ -213,34 +152,24 @@ def ensure_postings_index(
         w_imp = Window.partitionBy("term").orderBy(
             F.col("tf").desc(), F.col("doc_id").asc()
         )
-        pst = tf.withColumn(
+        return tf.withColumn(
             "df", F.count(F.lit(1)).over(w_term)
         ).withColumn("imp_rnk", F.row_number().over(w_imp))
-        shutil.rmtree(path, ignore_errors=True)
-        (
-            pst.repartition(_PST_BUCKETS, F.col("term"))
-            .write.format("parquet")
-            .bucketBy(_PST_BUCKETS, "term")
-            .sortBy("term")
-            .option("path", path)
-            .mode("overwrite")
-            .saveAsTable(name)
-        )
-        with open(stats_path, "w") as f:
-            json.dump({"n_docs": n_docs, "sum_dl": sum_dl}, f)
-        _write_marker(marker, src)
-    else:
-        with open(stats_path) as f:
-            st = json.load(f)
-        n_docs, sum_dl = int(st["n_docs"]), int(st["sum_dl"])
-        if not spark.catalog.tableExists(name):
-            # files current, catalog cold: pure DDL replay
-            spark.sql(
-                f"CREATE TABLE {name} (term string, doc_id bigint, "
-                "tf bigint, dl int, df bigint, imp_rnk int) "
-                "USING parquet CLUSTERED BY (term) SORTED BY (term) "
-                f"INTO {_PST_BUCKETS} BUCKETS LOCATION '{path}'"
-            )
+
+    name = publish_bucketed(
+        spark, _PST_KIND, [src], frame, key="term", n_buckets=_PST_BUCKETS
+    )
+    with open(os.path.join(artifact_path(_PST_KIND, [src]), "stats.json")) as f:
+        return name, json.load(f)
+
+
+def ensure_postings_index(
+    spark: SparkSession, sf_dir: str
+) -> tuple[str, int, float]:
+    """The documents postings index (see _postings_store), registered in
+    the session catalog. Returns ``(table_name, n_docs, avgdl)``."""
+    name, st = _postings_store(spark, sf_dir)
+    n_docs, sum_dl = int(st["n_docs"]), int(st["sum_dl"])
     return name, n_docs, n_docs and sum_dl / n_docs
 
 
@@ -637,47 +566,13 @@ _PST_INGEST_BUCKETS = 16
 
 
 def _stream_pst_landing(sf_dir: str) -> str:
-    """Land the documents corpus as THREE parquet files in ascending
-    doc_id order with increasing mtimes — the deterministic micro-batch
-    sequence construction shared with _stream_ivf_landing
-    (plans/vector.py) and the streaming-dedup landing."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    root = os.path.dirname(os.path.dirname(os.path.dirname(__file__)))
-    sf = os.path.basename(sf_dir.rstrip("/"))
-    d = os.path.join(
-        root,
-        "spark-warehouse",
+    """The documents corpus as THREE micro-batch files in ascending
+    doc_id order (sources/warehouse.py::publish_landing)."""
+    return publish_landing(
         f"stream_pst_v{_STREAM_PST_VERSION}",
-        f"{sf}_{corpus_tag(sf_dir)}",
+        table_path(sf_dir, "documents"),
+        ["doc_id", "text"],
     )
-    src = table_path(sf_dir, "documents")
-    parts = [os.path.join(d, f"part{i}.parquet") for i in range(3)]
-    src_mtime = os.path.getmtime(src)
-    if all(
-        os.path.exists(p) and os.path.getmtime(p) >= src_mtime
-        for p in parts
-    ):
-        return d
-    os.makedirs(d, exist_ok=True)
-    tbl = pq.read_table(src, columns=["doc_id", "text"])
-    rows = sorted(zip(tbl["doc_id"].to_pylist(), tbl["text"].to_pylist()))
-    n = len(rows)
-    cuts = [0, n // 3, 2 * n // 3, n]
-    for i in range(3):
-        chunk = rows[cuts[i] : cuts[i + 1]]
-        pq.write_table(
-            pa.table(
-                {
-                    "doc_id": pa.array([r[0] for r in chunk], pa.int64()),
-                    "text": pa.array([r[1] for r in chunk], pa.string()),
-                }
-            ),
-            parts[i],
-        )
-        os.utime(parts[i], (src_mtime + i, src_mtime + i))
-    return d
 
 
 _STREAM_PST_ORACLE = f"""
@@ -771,95 +666,84 @@ def _run_stream_postings(
     sidecar rows are bit-identical to the batch-built positional index
     rows — pinned in tests/test_postings_store.py.
 
-    ROUND-11 (r10 verdict task 2 / ADVICE): the streamed store is now
-    WARM across invocations AND runs — a ``_STREAMED_OK`` marker
-    records the landing's source mtime when the stream drains; while
-    the marker matches, every later call returns the persisted store
-    without re-ingesting (the three streaming lanes previously each
-    replayed the full micro-batch ingest per bench run, so the bench
-    number measured 43–53s of ingest instead of the 0.5–1s query). A
-    stale landing (source parquet regenerated) re-streams LOUDLY: the
-    mismatch is logged to stderr, the work dir is rebuilt, and the
-    marker re-stamped — the same staleness contract the batch stores'
-    mtime markers use. tests/test_postings_store.py pins both the
-    warm-skip and the loud re-stream."""
-    import shutil
-    import sys
-
+    ROUND-11 (r10 verdict task 2 / ADVICE): the streamed store is
+    WARM across invocations AND runs — it is published (sources/
+    warehouse.py) under a fingerprint of documents.parquet, so every
+    later call returns the persisted store without re-ingesting (the
+    three streaming lanes previously each replayed the full micro-batch
+    ingest per bench run, so the bench number measured 43–53s of ingest
+    instead of the 0.5–1s query). A regenerated source re-streams
+    LOUDLY: the superseded store is named on stderr. A stream that does
+    not drain publishes nothing. tests/test_postings_store.py pins both
+    the warm-skip and the loud re-stream."""
     landing = _stream_pst_landing(sf_dir)
-    work = landing.rstrip("/") + "__run"
-    tf_store = os.path.join(work, "pst_store")
-    pos_store = os.path.join(work, "pos_store")
-    marker = os.path.join(work, "_STREAMED_OK")
-    src_mtime = os.path.getmtime(table_path(sf_dir, "documents"))
-    if os.path.exists(marker):
-        with open(marker) as fh:
-            stamped = fh.read().strip()
-        if stamped == repr(src_mtime):
-            return tf_store, pos_store  # warm store: query-only cost
-        print(
-            "[stream_postings] landing stale "
-            f"(marker {stamped} != source {src_mtime!r}); "
-            f"re-streaming {work}",
-            file=sys.stderr,
-        )
-    shutil.rmtree(work, ignore_errors=True)  # deterministic re-runs
+    srcs = [table_path(sf_dir, "documents")]
+    kind = f"stream_pst_run_v{_STREAM_PST_VERSION}"
 
-    def apply(batch: DataFrame, _batch_id: int) -> None:
-        pos = (
-            batch.select(
-                "doc_id",
-                F.posexplode(TX.tokens("text")).alias("pos0", "term"),
+    def stream(work: str) -> None:
+        for old in superseded(kind, srcs):
+            print(
+                f"[stream_postings] source changed since {old}; "
+                f"re-streaming into {work}",
+                file=sys.stderr,
             )
-            .groupBy("term", "doc_id")
-            .agg(
-                F.sort_array(
-                    F.collect_list(F.col("pos0") + 1)
-                ).alias("positions")
-            )
-            .withColumn(
-                "bkt",
-                F.pmod(TX.md5_long("term"), F.lit(_PST_INGEST_BUCKETS)),
-            )
-            .persist()
-        )
-        try:
-            pos.write.mode("append").partitionBy("bkt").parquet(pos_store)
-            (
-                pos.select(
-                    "term",
+        tf_store = os.path.join(work, "pst_store")
+        pos_store = os.path.join(work, "pos_store")
+
+        def apply(batch: DataFrame, _batch_id: int) -> None:
+            pos = (
+                batch.select(
                     "doc_id",
-                    F.size("positions").cast("long").alias("tf"),
-                    "bkt",
+                    F.posexplode(TX.tokens("text")).alias("pos0", "term"),
                 )
-                .write.mode("append")
-                .partitionBy("bkt")
-                .parquet(tf_store)
+                .groupBy("term", "doc_id")
+                .agg(
+                    F.sort_array(
+                        F.collect_list(F.col("pos0") + 1)
+                    ).alias("positions")
+                )
+                .withColumn(
+                    "bkt",
+                    F.pmod(TX.md5_long("term"), F.lit(_PST_INGEST_BUCKETS)),
+                )
+                .persist()
             )
-        finally:
-            pos.unpersist()
+            try:
+                pos.write.mode("append").partitionBy("bkt").parquet(pos_store)
+                (
+                    pos.select(
+                        "term",
+                        "doc_id",
+                        F.size("positions").cast("long").alias("tf"),
+                        "bkt",
+                    )
+                    .write.mode("append")
+                    .partitionBy("bkt")
+                    .parquet(tf_store)
+                )
+            finally:
+                pos.unpersist()
 
-    q = (
-        spark.readStream.schema("doc_id bigint, text string")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(landing)
-        .writeStream.foreachBatch(apply)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    finished = q.awaitTermination(300)
-    if not finished:
-        # r9 ADVICE: on timeout foreachBatch may still be appending —
-        # reading the store now would return a silently partial census
-        q.stop()
-        raise RuntimeError(
-            "streaming postings ingest: stream did not drain within "
-            "300s; refusing to read a partially-appended store"
+        q = (
+            spark.readStream.schema("doc_id bigint, text string")
+            .option("maxFilesPerTrigger", "1")
+            .parquet(landing)
+            .writeStream.foreachBatch(apply)
+            .option("checkpointLocation", os.path.join(work, "ckpt"))
+            .trigger(availableNow=True)
+            .start()
         )
-    with open(marker, "w") as fh:
-        fh.write(repr(src_mtime))
-    return tf_store, pos_store
+        if not q.awaitTermination(300):
+            # r9 ADVICE: on timeout foreachBatch may still be appending —
+            # publishing now would serve a silently partial census
+            q.stop()
+            raise RuntimeError(
+                "streaming postings ingest: stream did not drain within "
+                "300s; refusing to publish a partially-appended store"
+            )
+
+    work = publish(kind, srcs, stream)
+    return os.path.join(work, "pst_store"), os.path.join(work, "pos_store")
 
 
 def _pst_bucket_of(term: str) -> int:
@@ -1111,40 +995,21 @@ def postings_vocab_rebuild_plan(
 # Positional postings sidecar + phrase retrieval from the index
 # ---------------------------------------------------------------------------
 
-_POS_VERSION = 2  # v2: corpus-tagged roots + provenance-checked markers
-
-
-def _pos_root(sf_dir: str) -> str:
-    root = os.path.dirname(os.path.dirname(os.path.dirname(__file__)))
-    sf = os.path.basename(sf_dir.rstrip("/"))
-    return os.path.join(
-        root,
-        "spark-warehouse",
-        f"postings_pos_v{_POS_VERSION}",
-        f"{sf}_{corpus_tag(sf_dir)}",
-    )
+_POS_KIND = "pstpos_v2"
 
 
 def ensure_positional_index(spark: SparkSession, sf_dir: str) -> str:
     """The POSITIONAL sidecar of the postings store — (term, doc_id,
     positions array, 1-based), bucketed by term like the main table,
-    with its own mtime staleness guard and pure-DDL catalog replay.
-    Kept as a separate table (not a column on the tf store) because
-    positions are ~dl/df× larger than the tf rows and only phrase /
-    proximity queries pay for them — the standard Lucene split between
-    frequency and position files."""
+    published and registered the same way. Kept as a separate table
+    (not a column on the tf store) because positions are ~dl/df× larger
+    than the tf rows and only phrase / proximity queries pay for them —
+    the standard Lucene split between frequency and position files."""
     spark.conf.set(
         "spark.sql.sources.bucketing.autoBucketedScan.enabled", "false"
     )
-    sf = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    name = f"pstpos_documents_{sf}_{corpus_tag(sf_dir)}"
-    path = os.path.join(_pos_root(sf_dir), "positions")
-    marker = os.path.join(_pos_root(sf_dir), "_SOURCE_MTIME")
-    src = table_path(sf_dir, "documents")
-    fresh = _marker_fresh(marker, src) and _data_present(path)
-    if spark.catalog.tableExists(name) and not fresh:
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-    if not fresh:
+
+    def frame(_: str) -> DataFrame:
         docs = load_table(spark, sf_dir, "documents").select(
             "doc_id", "text"
         )
@@ -1152,28 +1017,18 @@ def ensure_positional_index(spark: SparkSession, sf_dir: str) -> str:
             "doc_id",
             F.posexplode(TX.tokens("text")).alias("pos0", "term"),
         ).select("doc_id", "term", (F.col("pos0") + 1).alias("pos"))
-        pst = pos.groupBy("term", "doc_id").agg(
+        return pos.groupBy("term", "doc_id").agg(
             F.sort_array(F.collect_list("pos")).alias("positions")
         )
-        shutil.rmtree(path, ignore_errors=True)
-        (
-            pst.repartition(_PST_BUCKETS, F.col("term"))
-            .write.format("parquet")
-            .bucketBy(_PST_BUCKETS, "term")
-            .sortBy("term")
-            .option("path", path)
-            .mode("overwrite")
-            .saveAsTable(name)
-        )
-        _write_marker(marker, src)
-    elif not spark.catalog.tableExists(name):
-        spark.sql(
-            f"CREATE TABLE {name} (term string, doc_id bigint, "
-            "positions array<int>) "
-            "USING parquet CLUSTERED BY (term) SORTED BY (term) "
-            f"INTO {_PST_BUCKETS} BUCKETS LOCATION '{path}'"
-        )
-    return name
+
+    return publish_bucketed(
+        spark,
+        _POS_KIND,
+        [table_path(sf_dir, "documents")],
+        frame,
+        key="term",
+        n_buckets=_PST_BUCKETS,
+    )
 
 
 @register(
@@ -1917,9 +1772,8 @@ def query_likelihood_from_index(
     doubles). The corpus text is never read. At 100 TB the plan is an
     index lookup bounded by the query terms' document frequencies plus
     a 3-row broadcast — identical cost class to bm25_topk_from_index."""
-    name, n_docs, _ = ensure_postings_index(spark, sf_dir)
-    with open(os.path.join(_pst_root(sf_dir), "_STATS.json")) as f:
-        ct = float(json.load(f)["sum_dl"])
+    name, st = _postings_store(spark, sf_dir)
+    ct = float(st["sum_dl"])
     pst = spark.table(name)
     pc = (
         pst.where(F.col("term").isin(*QUERY_TERMS))
@@ -2729,6 +2583,20 @@ LIMIT {_SPL_TOP}
 """
 
 
+def _gram_hashes(t: str) -> tuple[list[int], float]:
+    """A lexicon term's gram-hash list (whole term, then its trigrams)
+    and the exact integer norm of its count vector."""
+    grams = [t] + (
+        [t[i : i + 3] for i in range(len(t) - 2)] if len(t) >= 3 else []
+    )
+    hl = [
+        int(hashlib.md5(g.encode()).hexdigest()[:15], 16) % _CB_DIM
+        for g in grams
+    ]
+    nrm = math.sqrt(float(sum(v * v for v in Counter(hl).values())))
+    return hl, nrm
+
+
 def _trigram_sims(
     t: str, qvecs: dict[int, list[float]]
 ) -> list[tuple[int, float]]:
@@ -2738,23 +2606,51 @@ def _trigram_sims(
     float sum, exact integer norm, positive-domain half-away 6dp round;
     see splade_expansion_from_index's docstring). Worker-side: called
     per term inside mapInPandas batches."""
-    import hashlib
-    import math
-    from collections import Counter
-
-    grams = [t] + (
-        [t[i : i + 3] for i in range(len(t) - 2)] if len(t) >= 3 else []
-    )
-    hl = [
-        int(hashlib.md5(g.encode()).hexdigest()[:15], 16) % _CB_DIM
-        for g in grams
-    ]
-    c = Counter(hl)
-    nrm = math.sqrt(float(sum(v * v for v in c.values())))
+    hl, nrm = _gram_hashes(t)
+    # positive-domain half-away-from-zero 6dp — F.round / DuckDB round
+    # semantics, NOT banker's
     return [
-        (qi, math.floor((sum(qv[h] for h in hl) / nrm) * 1e6 + 0.5) / 1e6)
+        (qi, math.floor((sum(map(qv.__getitem__, hl)) / nrm) * 1e6 + 0.5) / 1e6)
         for qi, qv in qvecs.items()
     ]
+
+
+def _trigram_max_sim(t: str, qvecs: dict[int, list[float]]) -> float:
+    """max over query tokens of _trigram_sims(t, qvecs), without the
+    per-(term, qi) tuples — the SPLADE lane's expansion weight."""
+    hl, nrm = _gram_hashes(t)
+    return max(
+        math.floor((sum(map(qv.__getitem__, hl)) / nrm) * 1e6 + 0.5) / 1e6
+        for qv in qvecs.values()
+    )
+
+
+def _trihybrid_sweep_batch(terms, qvecs: dict[int, list[float]]):
+    """One batch of trihybrid_rrf_from_index's shared lexicon sweep: the
+    batch-local per-qi top-m (sim desc, term asc) plus one qi=0 row per
+    τ-qualified term carrying the SPLADE expansion weight."""
+    import pandas as pd
+
+    rows: list[tuple] = []
+    tau_rows: list[tuple] = []
+    for t in terms:
+        sims = _trigram_sims(t, qvecs)
+        rows.extend((t, qi, s) for qi, s in sims)
+        best = max(s for _, s in sims)
+        if best >= _SPL_TAU:
+            # qi=0 is disjoint from the PLAID candidate rows' qi in 1..3
+            tau_rows.append((t, 0, best))
+    # explicit dtypes: an empty frame then concatenates without a dtype
+    # change (pandas deprecates the implicit one)
+    cols, dtypes = ["term", "qi", "sim"], {"qi": "int32", "sim": "float64"}
+    topm = (
+        pd.DataFrame(rows, columns=cols)
+        .astype(dtypes)
+        .sort_values(["qi", "sim", "term"], ascending=[True, False, True])
+        .groupby("qi", sort=False)
+        .head(_PLAID_M)
+    )
+    return pd.concat([topm, pd.DataFrame(tau_rows, columns=cols).astype(dtypes)])
 
 
 @register(
@@ -2826,10 +2722,7 @@ def splade_expansion_from_index(
             out_t: list = []
             out_w: list = []
             for t in pdf["term"]:
-                # rounding inside _trigram_sims: positive-domain
-                # half-away-from-zero 6dp — F.round / DuckDB round
-                # semantics, NOT banker's
-                best = max(s for _, s in _trigram_sims(t, qvecs))
+                best = _trigram_max_sim(t, qvecs)
                 if best >= _SPL_TAU:
                     out_t.append(t)
                     out_w.append(best)
@@ -3433,46 +3326,8 @@ def trihybrid_rrf_from_index(
     qvecs = {i: qu[i] for i in sorted(qu)}
 
     def sweep(batches):
-        import pandas as pd
-
         for pdf in batches:
-            rows: list[tuple] = []
-            tau_rows: list[tuple] = []
-            for t in pdf["term"]:
-                sims = _trigram_sims(t, qvecs)
-                rows.extend((t, qi, s) for qi, s in sims)
-                best = max(s for _, s in sims)
-                if best >= _SPL_TAU:
-                    # qi=0 carries the SPLADE expansion weight
-                    # (max-over-query-tokens sim) — disjoint from the
-                    # PLAID candidate rows' qi in 1..3
-                    tau_rows.append((t, 0, best))
-            df = pd.DataFrame(rows, columns=["term", "qi", "sim"])
-            if df.empty:
-                yield pd.DataFrame(
-                    {
-                        "term": pd.Series(dtype=object),
-                        "qi": pd.Series(dtype="int32"),
-                        "sim": pd.Series(dtype="float64"),
-                    }
-                )
-                continue
-            topm = (
-                df.sort_values(
-                    ["qi", "sim", "term"],
-                    ascending=[True, False, True],
-                )
-                .groupby("qi", sort=False)
-                .head(_PLAID_M)
-            )
-            yield pd.concat(
-                [
-                    topm,
-                    pd.DataFrame(
-                        tau_rows, columns=["term", "qi", "sim"]
-                    ),
-                ]
-            )
+            yield _trihybrid_sweep_batch(pdf["term"], qvecs)
 
     cand = (
         pst.select("term")

@@ -10,21 +10,18 @@ so DuckDB replays the identical linear algebra in SQL.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from emails_to_vector_db_spark.functions.vector import l2_distance
 from emails_to_vector_db_spark.operators.projection import (
     jl_matrix,
-    load_pca,
     project_vectors,
-    save_pca,
     train_pca_numpy,
 )
 from emails_to_vector_db_spark.plans.registry import register
 from emails_to_vector_db_spark.sources.tables import load_table
+from emails_to_vector_db_spark.sources.warehouse import publish_json
 
 _DIM = 64
 _JL_OUT = 16
@@ -103,30 +100,21 @@ def embedding_jl_projection_pairs(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-def _pca_index_path() -> str:
-    root = os.path.dirname(os.path.dirname(os.path.dirname(__file__)))
-    return os.path.join(
-        root, "spark-warehouse", "pca_index", f"embeddings_k{_PCA_K}.json"
-    )
-
-
 def _pca_index():
-    """The persisted PCA index (mean + top-k components), (re)built once
-    from the fixed sf0.001 training sample via pyarrow + numpy — no Spark
-    session, no jobs, exactly like the IVF quantizer
+    """The persisted PCA index (mean + top-k components), published once
+    per generation of the fixed sf0.001 training sample via pyarrow +
+    numpy — no Spark session, no jobs, exactly like the IVF quantizer
     (``plans/vector.py::_ivf_centroids``). Both the Spark plan and the
     DuckDB oracle embed these SAME literals."""
-    path = _pca_index_path()
-    idx = load_pca(path)
-    if idx is None:
+
+    def train() -> tuple:
         import pyarrow.parquet as pq
 
         tbl = pq.read_table(_PCA_SAMPLE, columns=["vec_id", "embedding"])
         d = tbl.sort_by("vec_id").to_pydict()
-        mean, comps, eigvals = train_pca_numpy(d["embedding"], _PCA_K)
-        save_pca(path, mean, comps, eigvals)
-        idx = mean, comps, eigvals
-    return idx
+        return train_pca_numpy(d["embedding"], _PCA_K)
+
+    return tuple(publish_json(f"pca_index_k{_PCA_K}", [_PCA_SAMPLE], train))
 
 
 def _pca_oracle() -> str:
@@ -154,8 +142,8 @@ def embedding_pca_topvar(spark: SparkSession, sf_dir: str) -> DataFrame:
     the explained-variance profile an ingest pipeline monitors to decide
     how narrow the stored vectors can be.
 
-    The component matrix is a PERSISTED index artifact (spark-warehouse/
-    pca_index/, built once from the fixed training sample): no
+    The component matrix is a PERSISTED index artifact (published once
+    per training-sample generation): no
     eigendecomposition in this query's plan. Centering uses linearity —
     dot(x−μ, c) = dot(x, c) − dot(μ, c) — so the plan subtracts a scalar
     literal per component instead of re-centering every vector. The

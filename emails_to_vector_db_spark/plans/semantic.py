@@ -27,19 +27,13 @@ from emails_to_vector_db_spark.plans.dedup import (
 )
 from emails_to_vector_db_spark.plans.registry import register
 from emails_to_vector_db_spark.plans.vector import PROBE_ID, K
-from emails_to_vector_db_spark.sources.tables import load_table
+from emails_to_vector_db_spark.sources.tables import load_table, table_path
+from emails_to_vector_db_spark.sources.warehouse import publish_json
 
 _ORACLE_SF_DIR = "/root/testdata/sf0.01"
 _SEM_SEED = 77
 _SEM_TAU = 0.99
 _TRAIN_SAMPLE = "/root/testdata/sf0.001/embeddings.parquet"
-
-
-def _warehouse_path(*parts: str) -> str:
-    import os
-
-    root = os.path.dirname(os.path.dirname(os.path.dirname(__file__)))
-    return os.path.join(root, "spark-warehouse", *parts)
 
 
 # ---------------------------------------------------------------------------
@@ -60,43 +54,28 @@ def _sem_centroids(k: int, sf_dir: str) -> list[list[float]]:
     magnitudes — a scaled copy of a vector must land in its original's
     cluster). Built once, loaded thereafter; reproducible from (sample,
     k, seed). The sample is CORPUS-SCALED (max(500, 40·k) hash-sampled
-    rows of sf_dir's own embeddings) and the artifact is keyed by corpus
-    path + provenance-checked, same contract as the IVF quantizer
+    rows of sf_dir's own embeddings) and the artifact is published under
+    a fingerprint of the corpus, same contract as the IVF quantizer
     (plans/vector.py::_ivf_centroids) — a fixed slice would clamp the
     self-tuned k exactly like the r9 sf30 superlinearity."""
-    import os
-
     from emails_to_vector_db_spark.operators.ivf import (
         hash_sample_vectors,
-        load_quantizer,
-        save_quantizer,
-        source_mtime,
         train_centroids_numpy,
     )
-    from emails_to_vector_db_spark.plans.vector import (
-        _corpus_tag,
-        _ivf_sample_target,
-    )
+    from emails_to_vector_db_spark.plans.vector import _ivf_sample_target
 
-    src = os.path.join(sf_dir.rstrip("/"), "embeddings.parquet")
-    mtime = source_mtime(src)
-    path = _warehouse_path(
-        "semdedup_index",
-        f"embeddings_{_corpus_tag(sf_dir)}_k{k}_seed{_SEM_SEED}.json",
-    )
-    cents = load_quantizer(path, src=src, src_mtime=mtime)
-    if cents is None:
+    src = table_path(sf_dir, "embeddings")
+
+    def train() -> list[list[float]]:
         import numpy as np
 
         sample = hash_sample_vectors(src, _ivf_sample_target(k))
         X = np.asarray(sample, dtype=np.float64)
         X = X / np.linalg.norm(X, axis=1, keepdims=True)
         k_eff = min(k, len(X) // 4)
-        cents = train_centroids_numpy(X, n_centroids=k_eff, seed=_SEM_SEED)
-        save_quantizer(
-            path, cents, src=src, src_mtime=mtime, n_sample=len(X)
-        )
-    return cents
+        return train_centroids_numpy(X, n_centroids=k_eff, seed=_SEM_SEED)
+
+    return publish_json(f"semdedup_index_k{k}_seed{_SEM_SEED}", [src], train)
 
 
 def _semdedup_oracle() -> str:
@@ -331,7 +310,7 @@ def semdedup_from_ivf_lists(
     dedup with NO fresh clustering pass: the coarse quantizer that
     already partitions the corpus for ANN search
     (plans/vector.py::_ivf_centroids, corpus-scaled training sample,
-    provenance-checked artifact) doubles as the SemDeDup cluster map,
+    source-fingerprinted artifact) doubles as the SemDeDup cluster map,
     so one index artifact serves retrieval AND curation. Within each
     inverted list, a vector is pruned when a lower-id list-mate has
     cosine ≥ 0.99 (keep-min-id) — the corpus carries planted EXACT
@@ -449,38 +428,24 @@ def _pq_codebooks() -> list[list[list[float]]]:
     """PQ codebooks trained once on the fixed sf0.001 slice. Unlike the
     coarse quantizers, k here is FIXED (32 codewords × 8 subspaces — it
     does not self-tune with the corpus), so a fixed training sample is
-    statistically sound; the artifact still carries provenance (source
-    path + mtime) so a regenerated fixture retrains instead of serving
-    codebooks for vanished data (the r10 guarded-artifact rule)."""
-    from emails_to_vector_db_spark.operators.ivf import (
-        load_quantizer,
-        save_quantizer,
-        source_mtime,
-    )
+    statistically sound; the artifact is still published under a
+    fingerprint of the sample (path, mtime, size) so a regenerated
+    fixture retrains instead of serving codebooks for vanished data (the
+    r10 guarded-artifact rule)."""
     from emails_to_vector_db_spark.operators.pq import train_pq_codebooks
 
-    mtime = source_mtime(_TRAIN_SAMPLE)
-    path = _warehouse_path(
-        "pq_index",
-        f"embeddings_m{_PQ_M}_k{_PQ_K}_seed{_PQ_SEED}_v2.json",
-    )
-    cbs = load_quantizer(path, src=_TRAIN_SAMPLE, src_mtime=mtime)
-    if cbs is None:
+    def train() -> list[list[list[float]]]:
         import pyarrow.parquet as pq
 
         tbl = pq.read_table(_TRAIN_SAMPLE, columns=["vec_id", "embedding"])
         d = tbl.sort_by("vec_id").to_pydict()
-        cbs = train_pq_codebooks(
+        return train_pq_codebooks(
             d["embedding"], m=_PQ_M, k=_PQ_K, seed=_PQ_SEED
         )
-        save_quantizer(
-            path,
-            cbs,
-            src=_TRAIN_SAMPLE,
-            src_mtime=mtime,
-            n_sample=len(d["embedding"]),
-        )
-    return cbs
+
+    return publish_json(
+        f"pq_index_m{_PQ_M}_k{_PQ_K}_seed{_PQ_SEED}_v2", [_TRAIN_SAMPLE], train
+    )
 
 
 def _pq_oracle() -> str:
@@ -1195,7 +1160,7 @@ def bitext_margin_mining_ivf(
     code as the exact form (_bmm_margin_tail), so the two registered
     queries differ only in their hash-checked candidate sets; the
     quantizer is the same persisted artifact the whole IVF family
-    loads (spark-warehouse/ivf_index/, rebuilt never — the
+    loads (a published warehouse artifact, rebuilt never — the
     ivf_rebalance lane maintains it)."""
     from emails_to_vector_db_spark.operators.ivf import (
         assign_centroid,

@@ -12,7 +12,8 @@ from pyspark.sql import functions as F
 
 from emails_to_vector_db_spark.functions import text as TX
 from emails_to_vector_db_spark.plans.registry import register
-from emails_to_vector_db_spark.sources.tables import load_table
+from emails_to_vector_db_spark.sources.tables import load_table, table_path
+from emails_to_vector_db_spark.sources.warehouse import publish_landing
 
 _STATS_ORACLE = """
 SELECT l_returnflag,
@@ -997,47 +998,15 @@ _STREAM_PSI_VERSION = 1
 
 
 def _stream_events_landing(sf_dir: str) -> str:
-    """Land events as THREE parquet files in ascending event_id order
-    with increasing mtimes — the deterministic micro-batch sequence the
-    file stream source replays (mtime then path ordering; the
-    _stream_dedup_landing convention). Only (event_id, value) is
-    landed, so the monitor is untouched by the events-timestamp
-    normalization concern."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    root = os.path.dirname(os.path.dirname(os.path.dirname(__file__)))
-    sf = os.path.basename(sf_dir.rstrip("/"))
-    d = os.path.join(
-        root, "spark-warehouse", f"stream_psi_v{_STREAM_PSI_VERSION}", sf
+    """Events' (event_id, value) as THREE micro-batch files in ascending
+    event_id order (sources/warehouse.py::publish_landing). Only these
+    two columns are landed, so the monitor is untouched by the
+    events-timestamp normalization concern."""
+    return publish_landing(
+        f"stream_psi_v{_STREAM_PSI_VERSION}",
+        table_path(sf_dir, "events"),
+        ["event_id", "value"],
     )
-    src = os.path.join(sf_dir, "events.parquet")
-    parts = [os.path.join(d, f"part{i}.parquet") for i in range(3)]
-    src_mtime = os.path.getmtime(src)
-    if all(
-        os.path.exists(p) and os.path.getmtime(p) >= src_mtime for p in parts
-    ):
-        return d
-    os.makedirs(d, exist_ok=True)
-    tbl = pq.read_table(src, columns=["event_id", "value"])
-    rows = sorted(zip(tbl["event_id"].to_pylist(), tbl["value"].to_pylist()))
-    n = len(rows)
-    cuts = [0, n // 3, 2 * n // 3, n]
-    for i in range(3):
-        chunk = rows[cuts[i] : cuts[i + 1]]
-        pq.write_table(
-            pa.table(
-                {
-                    "event_id": pa.array([r[0] for r in chunk], pa.int64()),
-                    "value": pa.array([r[1] for r in chunk], pa.float64()),
-                }
-            ),
-            parts[i],
-        )
-        os.utime(parts[i], (src_mtime + i + 1, src_mtime + i + 1))
-    return d
 
 
 _STREAM_PSI_ORACLE = f"""

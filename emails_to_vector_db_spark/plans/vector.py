@@ -20,7 +20,8 @@ from emails_to_vector_db_spark.functions.vector import (
     l2_distance,
 )
 from emails_to_vector_db_spark.plans.registry import register
-from emails_to_vector_db_spark.sources.tables import load_table
+from emails_to_vector_db_spark.sources.tables import load_table, table_path
+from emails_to_vector_db_spark.sources.warehouse import publish_json, publish_landing
 
 PROBE_ID = 7
 K = 5
@@ -450,52 +451,28 @@ def _ivf_sample_target(k: int) -> int:
     return max(500, _IVF_SAMPLE_PER_LIST * k)
 
 
-def _corpus_tag(sf_dir: str) -> str:
-    """Index-artifact key for a corpus — sources.tables.corpus_tag."""
-    from emails_to_vector_db_spark.sources.tables import corpus_tag
-
-    return corpus_tag(sf_dir)
-
-
-def _ivf_index_path(k: int, sf_dir: str) -> str:
-    import os
-
-    root = os.path.dirname(os.path.dirname(os.path.dirname(__file__)))
-    return os.path.join(
-        root, "spark-warehouse", "ivf_index",
-        f"embeddings_{_corpus_tag(sf_dir)}_k{k}_seed{_IVF_SEED}.json",
-    )
-
-
 def _ivf_centroids(k: int, sf_dir: str) -> list[list[float]]:
-    """The persisted IVF quantizer for THIS corpus: loaded from the
-    warehouse index artifact (provenance-checked — source path + mtime,
-    so a regenerated fixture or a basename-colliding corpus retrains
-    instead of serving a stale index); (re)built once from a
-    CORPUS-SCALED deterministic hash sample (max(500, 40·k) rows of the
-    corpus's own embeddings, read via pyarrow — no Spark session, no
-    jobs) with deterministic numpy k-means. Both the Spark plan and the
-    DuckDB oracle embed these SAME centroid literals, so the registered
-    query never fits k-means — it loads the index, like a real vector
-    store. Because the sample grows with k, the expected list length
-    stays ~128 at any corpus size: the round-9 sf30 superlinearity
-    (quantizer clamped at 125 lists by a fixed 500-row sample) cannot
-    recur."""
-    import os
-
+    """The persisted IVF quantizer for THIS corpus: published once per
+    fixture generation as a warehouse JSON artifact (sources/
+    warehouse.py — keyed by the source's path, mtime and size, so a
+    regenerated fixture or a basename-colliding corpus retrains instead
+    of serving a stale index), built from a CORPUS-SCALED deterministic
+    hash sample (max(500, 40·k) rows of the corpus's own embeddings,
+    read via pyarrow — no Spark session, no jobs) with deterministic
+    numpy k-means. Both the Spark plan and the DuckDB oracle embed these
+    SAME centroid literals, so the registered query never fits k-means —
+    it loads the index, like a real vector store. Because the sample
+    grows with k, the expected list length stays ~128 at any corpus
+    size: the round-9 sf30 superlinearity (quantizer clamped at 125
+    lists by a fixed 500-row sample) cannot recur."""
     from emails_to_vector_db_spark.operators.ivf import (
         hash_sample_vectors,
-        load_quantizer,
-        save_quantizer,
-        source_mtime,
         train_centroids_numpy,
     )
 
-    src = os.path.join(sf_dir.rstrip("/"), "embeddings.parquet")
-    mtime = source_mtime(src)
-    path = _ivf_index_path(k, sf_dir)
-    cents = load_quantizer(path, src=src, src_mtime=mtime)
-    if cents is None:
+    src = table_path(sf_dir, "embeddings")
+
+    def train() -> list[list[float]]:
         sample = hash_sample_vectors(src, _ivf_sample_target(k))
         # a quantizer cannot have more lists than training vectors; with
         # the corpus-scaled sample this fires only for degenerate tiny
@@ -509,13 +486,9 @@ def _ivf_centroids(k: int, sf_dir: str) -> list[list[float]]:
                 f"IVF k clamped {k}->{k_eff}: corpus yielded only "
                 f"{len(sample)} training vectors"
             )
-        cents = train_centroids_numpy(
-            sample, n_centroids=k_eff, seed=_IVF_SEED
-        )
-        save_quantizer(
-            path, cents, src=src, src_mtime=mtime, n_sample=len(sample)
-        )
-    return cents
+        return train_centroids_numpy(sample, n_centroids=k_eff, seed=_IVF_SEED)
+
+    return publish_json(f"ivf_index_k{k}_seed{_IVF_SEED}", [src], train)
 
 
 def _ivf_quantizer(sf_dir: str) -> list[list[float]]:
@@ -584,7 +557,7 @@ def ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF approximate KNN join (k-means coarse quantizer, nprobe=4 of 16
     lists) — the index the reference's pgvector store was designed for but
     never builds (``rag.py:77-82``). The quantizer is a PERSISTED index
-    artifact (spark-warehouse/ivf_index/, built once by deterministic
+    artifact (published once per fixture generation by deterministic
     numpy k-means over the fixed training sample): no KMeans fit in this
     query's plan, and the DuckDB oracle replays the identical assignment /
     nprobe / rerank with the same centroid literals — hash-checked, not
@@ -1098,49 +1071,13 @@ _STREAM_IVF_VERSION = 1
 
 
 def _stream_ivf_landing(sf_dir: str) -> str:
-    """Land the embeddings corpus as THREE parquet files in ascending
-    vec_id order with increasing mtimes — a deterministic micro-batch
-    sequence for the file-stream source (same construction as the
-    streaming-dedup landing, plans/corpus.py)."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    root = os.path.dirname(os.path.dirname(os.path.dirname(__file__)))
-    sf = os.path.basename(sf_dir.rstrip("/"))
-    d = os.path.join(
-        root, "spark-warehouse", f"stream_ivf_v{_STREAM_IVF_VERSION}", sf
+    """The embeddings corpus as THREE micro-batch files in ascending
+    vec_id order (sources/warehouse.py::publish_landing)."""
+    return publish_landing(
+        f"stream_ivf_v{_STREAM_IVF_VERSION}",
+        table_path(sf_dir, "embeddings"),
+        ["vec_id", "embedding"],
     )
-    src = f"{sf_dir.rstrip('/')}/embeddings.parquet"
-    parts = [os.path.join(d, f"part{i}.parquet") for i in range(3)]
-    src_mtime = os.path.getmtime(src)
-    if all(
-        os.path.exists(p) and os.path.getmtime(p) >= src_mtime for p in parts
-    ):
-        return d
-    os.makedirs(d, exist_ok=True)
-    tbl = pq.read_table(src, columns=["vec_id", "embedding"])
-    rows = sorted(
-        zip(tbl["vec_id"].to_pylist(), tbl["embedding"].to_pylist())
-    )
-    n = len(rows)
-    cuts = [0, n // 3, 2 * n // 3, n]
-    for i in range(3):
-        chunk = rows[cuts[i] : cuts[i + 1]]
-        pq.write_table(
-            pa.table(
-                {
-                    "vec_id": pa.array([r[0] for r in chunk], pa.int64()),
-                    "embedding": pa.array(
-                        [r[1] for r in chunk], pa.list_(pa.float32())
-                    ),
-                }
-            ),
-            parts[i],
-        )
-        os.utime(parts[i], (src_mtime + i, src_mtime + i))
-    return d
 
 
 def _stream_ivf_oracle() -> str:

@@ -89,6 +89,23 @@ def _sweep_stale_scratch(root: str, max_age_s: float = 2 * 3600) -> None:
             shutil.rmtree(ent.path, ignore_errors=True)
 
 
+def _driver_mem() -> str:
+    """``spark.driver.memory``: $SPARK_GRAFT_DRIVER_MEM when set, else
+    half of the host's MemTotal (local mode runs everything in the
+    driver JVM; the Python workers and page cache need the other half),
+    capped at the former fixed 48g, which also stands when /proc/meminfo
+    is unreadable."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        return "48g"
+    return f"{min(48 << 10, max(512, kb // 2048))}m"
+
+
 def get_spark(
     app_name: str = "emails_to_vector_db_spark",
     cpus: str | int | None = None,
@@ -129,7 +146,7 @@ def get_spark(
         # The postings index relies on term-IN-list bucket pruning, so
         # keep bucketed scans authoritative.
         .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", _driver_mem())
         .config(NANOS_AS_LONG, "true")
     )
     if local_dir:

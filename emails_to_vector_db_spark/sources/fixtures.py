@@ -27,6 +27,8 @@ from __future__ import annotations
 
 import os
 
+from emails_to_vector_db_spark.sources.warehouse import publish
+
 FIXTURE_EMAILS_N = 40
 FIXTURE_MEDIA_N = 48
 FEATURE_DIM = 16
@@ -38,8 +40,8 @@ ORACLE_SF_DIR = "/root/testdata/sf0.01"
 
 
 # Bump when fixture CONTENT changes (e.g. the media corpus format): the
-# writer is write-once per directory, so a new version gets a new dir and
-# stale files can never leak into the differential check.
+# fixtures are published once per version, so a new version gets a new
+# dir and stale files can never leak into the differential check.
 # v4: image rows alternate PPM / 24-bit BMP containers (decode dispatch).
 # v5: + image_resize_ref (sequential bilinear-thumbnail reference).
 # v6: + images_dhash_raw / image_dhash_ref (perceptual-hash dedup corpus
@@ -54,34 +56,35 @@ ORACLE_SF_DIR = "/root/testdata/sf0.01"
 FIXTURE_VERSION = 9
 
 
-def fixtures_dir() -> str:
-    root = os.path.dirname(os.path.dirname(os.path.dirname(__file__)))
-    return os.path.join(root, "spark-warehouse", f"fixtures_v{FIXTURE_VERSION}")
+_FIXTURE_NAMES = (
+    "emails_raw",
+    "emails_text_ref",
+    "media_raw",
+    "media_features_ref",
+    "video_frames_ref",
+    "audio_spectral_ref",
+    "image_resize_ref",
+    "audio_resample_ref",
+    "images_dhash_raw",
+    "image_dhash_ref",
+    "bpe_merges_ref",
+    "bpe_segment_ref",
+)
 
 
 def ensure_fixtures() -> dict[str, str]:
-    """Write all fixture parquet files if absent; return name → path."""
+    """Publish all fixture parquet files once per FIXTURE_VERSION (the
+    artifact has no sources: its kind carries the version); return
+    name → path."""
+    d = publish(f"fixtures_v{FIXTURE_VERSION}", [], _write_fixtures)
+    return {n: os.path.join(d, f"{n}.parquet") for n in _FIXTURE_NAMES}
+
+
+def _write_fixtures(d: str) -> None:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    d = fixtures_dir()
-    paths = {
-        "emails_raw": os.path.join(d, "emails_raw.parquet"),
-        "emails_text_ref": os.path.join(d, "emails_text_ref.parquet"),
-        "media_raw": os.path.join(d, "media_raw.parquet"),
-        "media_features_ref": os.path.join(d, "media_features_ref.parquet"),
-        "video_frames_ref": os.path.join(d, "video_frames_ref.parquet"),
-        "audio_spectral_ref": os.path.join(d, "audio_spectral_ref.parquet"),
-        "image_resize_ref": os.path.join(d, "image_resize_ref.parquet"),
-        "audio_resample_ref": os.path.join(d, "audio_resample_ref.parquet"),
-        "images_dhash_raw": os.path.join(d, "images_dhash_raw.parquet"),
-        "image_dhash_ref": os.path.join(d, "image_dhash_ref.parquet"),
-        "bpe_merges_ref": os.path.join(d, "bpe_merges_ref.parquet"),
-        "bpe_segment_ref": os.path.join(d, "bpe_segment_ref.parquet"),
-    }
-    if all(os.path.exists(p) for p in paths.values()):
-        return paths
-    os.makedirs(d, exist_ok=True)
+    paths = {n: os.path.join(d, f"{n}.parquet") for n in _FIXTURE_NAMES}
 
     from emails_to_vector_db_spark.sources.emails import (
         reference_extract_text,
@@ -332,4 +335,3 @@ def ensure_fixtures() -> dict[str, str]:
         ),
         paths["bpe_segment_ref"],
     )
-    return paths

@@ -18,38 +18,25 @@ from __future__ import annotations
 import json
 import os
 
+from emails_to_vector_db_spark.sources.tables import table_path
+from emails_to_vector_db_spark.sources.warehouse import publish
+
 FORMATS_VERSION = 1
-
-
-def _formats_dir(sf_dir: str) -> str:
-    root = os.path.dirname(os.path.dirname(os.path.dirname(__file__)))
-    sf = os.path.basename(sf_dir.rstrip("/"))
-    return os.path.join(
-        root, "spark-warehouse", f"formats_v{FORMATS_VERSION}", sf
-    )
+_COPIES = {"events_jsonl": "events.jsonl", "events_orc": "events.orc"}
 
 
 def ensure_format_copies(sf_dir: str) -> dict[str, str]:
-    """Write events as JSONL and ORC (if absent); return name → path."""
+    """Publish events as JSONL and ORC (once per fixture generation);
+    return name → path."""
+    src = table_path(sf_dir, "events")
+    d = publish(f"formats_v{FORMATS_VERSION}", [src], lambda d: _write_copies(src, d))
+    return {k: os.path.join(d, f) for k, f in _COPIES.items()}
+
+
+def _write_copies(src: str, d: str) -> None:
     import pyarrow as pa
     import pyarrow.orc as orc
     import pyarrow.parquet as pq
-
-    d = _formats_dir(sf_dir)
-    paths = {
-        "events_jsonl": os.path.join(d, "events.jsonl"),
-        "events_orc": os.path.join(d, "events.orc"),
-    }
-    src = os.path.join(sf_dir, "events.parquet")
-    # Staleness guard: the driver may regenerate the fixture between
-    # rounds — a copy older than its source is rewritten, not trusted.
-    src_mtime = os.path.getmtime(src)
-    if all(
-        os.path.exists(p) and os.path.getmtime(p) >= src_mtime
-        for p in paths.values()
-    ):
-        return paths
-    os.makedirs(d, exist_ok=True)
 
     tbl = pq.read_table(src)
     # → micros as plain int64 (the copies carry epoch_us, the readers
@@ -70,14 +57,12 @@ def ensure_format_copies(sf_dir: str) -> dict[str, str]:
         "props": tbl["props"].to_pylist(),
     }
 
-    tmp = paths["events_jsonl"] + ".tmp"
-    with open(tmp, "w") as f:
+    with open(os.path.join(d, _COPIES["events_jsonl"]), "w") as f:
         for i in range(len(ts_us)):
             f.write(
                 json.dumps({k: cols[k][i] for k in cols}, sort_keys=True)
             )
             f.write("\n")
-    os.replace(tmp, paths["events_jsonl"])
 
     out = pa.table(
         {
@@ -89,10 +74,7 @@ def ensure_format_copies(sf_dir: str) -> dict[str, str]:
             "props": pa.array(cols["props"], pa.string()),
         }
     )
-    tmp = paths["events_orc"] + ".tmp"
-    orc.write_table(out, tmp)
-    os.replace(tmp, paths["events_orc"])
-    return paths
+    orc.write_table(out, os.path.join(d, _COPIES["events_orc"]))
 
 
 EVENTS_COPY_SCHEMA = (

@@ -31,20 +31,6 @@ def table_path(sf_dir: str, name: str) -> str:
     return f"{sf_dir.rstrip('/')}/{name}.parquet"
 
 
-def corpus_tag(sf_dir: str) -> str:
-    """Warehouse-artifact key for a corpus: hash of the ABSOLUTE path —
-    never the basename, so two corpora sharing a basename (e.g.
-    /a/sf0.1 and /b/sf0.1) can't collide on one index location (the r9
-    ADVICE hazard: the mtime-only guard would then serve whichever
-    corpus built last)."""
-    import hashlib
-    import os
-
-    return hashlib.sha1(
-        os.path.abspath(sf_dir).encode("utf-8")
-    ).hexdigest()[:10]
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table; ``events`` gets its nanosecond timestamp
     normalized to a microsecond TimestampType (same truncation DuckDB

@@ -1,16 +1,217 @@
-"""Bucketed warehouse tables: shuffle-free co-located joins.
+"""Warehouse artifacts and bucketed tables.
 
-The 100 TB join strategy the fixture-parquet queries can't show: write both
-fact tables bucketed (and sorted) by the join key, and every subsequent
-equi-join on that key is exchange-free — the sort-merge join reads
-co-located buckets directly. This is Spark's answer to the reference's
-"let Postgres handle it" (every reference join is delegated SQL;
-SURVEY.md §2.3).
+Every artifact this engine derives from its sources (indexes, bucketed
+tables, quantizers, micro-batch landings, format copies, fixtures) is
+published by :func:`publish` under ``spark-warehouse/<kind>/``, in a
+directory named by a fingerprint of its sources: the absolute path,
+``st_mtime_ns`` and size of each file. A regenerated source therefore
+names a new directory, and "fresh" is one ``isdir``. The build writes a
+temp dir beside it and one ``os.rename`` publishes it, so a crashed
+build or the loser of a race never leaves a half-written directory at a
+served path.
+
+Bucketed tables: write both fact tables bucketed (and sorted) by the
+join key, and every later equi-join on that key is exchange-free — the
+sort-merge join reads co-located buckets directly. This is Spark's
+answer to the reference's "let Postgres handle it" (every reference
+join is delegated SQL; SURVEY.md §2.3).
 """
 
 from __future__ import annotations
 
+import hashlib
+import json
+import os
+import shutil
+import tempfile
+from typing import Any, Callable, Sequence
+
 from pyspark.sql import DataFrame, SparkSession
+
+WAREHOUSE = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
+    "spark-warehouse",
+)
+
+
+def _files(source: str) -> list[str]:
+    if not os.path.isdir(source):
+        return [source]
+    return sorted(
+        os.path.join(root, f) for root, _, fs in os.walk(source) for f in fs
+    )
+
+
+def artifact_path(kind: str, sources: Sequence[str]) -> str:
+    """The directory :func:`publish` serves ``kind`` from for ``sources``:
+    ``<corpus>_<state>``, where corpus hashes the sources' absolute paths
+    (two corpora sharing a basename never share a directory) and state
+    hashes every source file's path, ``st_mtime_ns`` and size."""
+    paths = [os.path.abspath(s) for s in sources]
+    corpus = hashlib.sha1("\0".join(paths).encode()).hexdigest()[:10]
+    state = hashlib.sha1()
+    for f in (f for p in paths for f in _files(p)):
+        st = os.stat(f)
+        state.update(f"{f}\0{st.st_mtime_ns}\0{st.st_size}\0".encode())
+    return os.path.join(WAREHOUSE, kind, f"{corpus}_{state.hexdigest()[:10]}")
+
+
+def superseded(kind: str, sources: Sequence[str]) -> list[str]:
+    """Published ``kind`` directories of the same sources at an older
+    state (the sources changed since they were built)."""
+    parent, name = os.path.split(artifact_path(kind, sources))
+    corpus = name.split("_")[0] + "_"
+    try:
+        entries = os.listdir(parent)
+    except FileNotFoundError:
+        return []
+    return sorted(
+        os.path.join(parent, e)
+        for e in entries
+        if e.startswith(corpus) and e != name
+    )
+
+
+def _alive(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:
+        pass
+    return True
+
+
+def publish(kind: str, sources: Sequence[str], build: Callable[[str], Any]) -> str:
+    """Return the directory holding ``kind`` built from ``sources``,
+    calling ``build(tmp_dir)`` first unless it is already published.
+
+    ``build`` fills a temp dir beside the served path and one
+    ``os.rename`` publishes it. When another process publishes first the
+    rename fails and this build is discarded. Temp dirs of builds whose
+    process died are swept, and a successful publish removes the
+    directories of the same sources it supersedes."""
+    path = artifact_path(kind, sources)
+    if os.path.isdir(path):
+        return path
+    parent, name = os.path.split(path)
+    os.makedirs(parent, exist_ok=True)
+    for e in os.listdir(parent):  # .<name>.<pid>.<rand>: a temp dir
+        part = e.split(".")
+        if len(part) == 4 and part[2].isdigit() and not _alive(int(part[2])):
+            shutil.rmtree(os.path.join(parent, e), ignore_errors=True)
+    tmp = tempfile.mkdtemp(prefix=f".{name}.{os.getpid()}.", dir=parent)
+    try:
+        build(tmp)
+        try:
+            os.rename(tmp, path)
+        except OSError:
+            if not os.path.isdir(path):
+                raise
+            return path  # lost the race: serve the winner's build
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    for old in superseded(kind, sources):
+        shutil.rmtree(old, ignore_errors=True)
+    return path
+
+
+def publish_json(kind: str, sources: Sequence[str], compute: Callable[[], Any]) -> Any:
+    """Publish ``compute()``'s JSON-serialisable result (a quantizer,
+    codebooks, a PCA basis) and return it as loaded from disk, so a
+    cold and a warm call return identical values."""
+
+    def build(d: str) -> None:
+        with open(os.path.join(d, "artifact.json"), "w") as f:
+            json.dump(compute(), f)
+
+    with open(os.path.join(publish(kind, sources, build), "artifact.json")) as f:
+        return json.load(f)
+
+
+def publish_landing(
+    kind: str,
+    src: str,
+    columns: list[str],
+    *,
+    n_parts: int = 3,
+    planted: Callable | None = None,
+) -> str:
+    """Land ``columns`` of parquet ``src`` (the first is the order key)
+    as ``n_parts`` files in ascending key order with ascending mtimes:
+    the deterministic micro-batch sequence a file-stream source replays,
+    since it orders files by mtime, then path. ``planted(rows)`` returns
+    rows appended after the corpus."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    def build(d: str) -> None:
+        rows = pq.read_table(src, columns=columns).sort_by(columns[0])
+        if planted is not None:
+            rows = pa.concat_tables([rows, planted(rows)])
+        n, base = rows.num_rows, os.stat(src).st_mtime
+        for i in range(n_parts):
+            lo, hi = n * i // n_parts, n * (i + 1) // n_parts
+            part = os.path.join(d, f"part{i}.parquet")
+            pq.write_table(rows.slice(lo, hi - lo), part)
+            os.utime(part, (base + i + 1, base + i + 1))
+
+    return publish(kind, [src], build)
+
+
+def publish_bucketed(
+    spark: SparkSession,
+    kind: str,
+    sources: Sequence[str],
+    frame: Callable[[str], DataFrame],
+    *,
+    key: str,
+    n_buckets: int,
+) -> str:
+    """Publish ``frame(dir)`` as a parquet table at ``dir/table``,
+    bucketed and sorted by ``key`` with one file per bucket, and register
+    it as ``<kind>_<fingerprint>``. ``frame`` may write sidecar files
+    into ``dir``. A catalog that already knows the name points at the
+    current files; a cold one replays one ``CREATE TABLE … LOCATION``
+    from the column list saved beside the table (no schema-inference
+    job, no data movement)."""
+    rebuilt = []
+
+    def build(d: str) -> None:
+        df = frame(d)
+        scratch = f"{kind}_build_{os.getpid()}"
+        try:
+            # repartition on the bucket key first → exactly ONE file per
+            # bucket. Spark only trusts SORTED BY when a bucket is a
+            # single file, so the join elides the per-task Sort as well
+            # as the Exchange. bucketBy needs saveAsTable: a scratch
+            # external table, dropped (files kept) once written.
+            df.repartition(n_buckets, key).write.format("parquet").bucketBy(
+                n_buckets, key
+            ).sortBy(key).option("path", os.path.join(d, "table")).saveAsTable(
+                scratch
+            )
+        finally:
+            spark.sql(f"DROP TABLE IF EXISTS {scratch}")
+        with open(os.path.join(d, "columns.ddl"), "w") as f:
+            f.write(", ".join(
+                f"`{c.name}` {c.dataType.simpleString()}" for c in df.schema
+            ))
+        rebuilt.append(d)
+
+    path = publish(kind, sources, build)
+    name = f"{kind}_{os.path.basename(path)}"
+    if rebuilt:  # a registration from before a rebuild has a stale file listing
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+    if not spark.catalog.tableExists(name):
+        with open(os.path.join(path, "columns.ddl")) as f:
+            cols = f.read()
+        spark.sql(
+            f"CREATE TABLE {name} ({cols}) USING parquet "
+            f"CLUSTERED BY ({key}) SORTED BY ({key}) "
+            f"INTO {n_buckets} BUCKETS LOCATION '{os.path.join(path, 'table')}'"
+        )
+    return name
 
 
 def write_bucketed(

@@ -186,22 +186,25 @@ def lane_bench(spark, docs: DataFrame) -> dict[str, float]:
     import shutil
 
     from emails_to_vector_db_spark.plans.postings import (
+        _POS_KIND,
+        _PST_KIND,
         _bm25_term_score,
-        _pos_root,
-        _pst_root,
         ensure_positional_index,
         ensure_postings_index,
     )
+    from emails_to_vector_db_spark.sources.tables import table_path
+    from emails_to_vector_db_spark.sources.warehouse import artifact_path
 
     results: dict[str, float] = {}
 
-    shutil.rmtree(_pst_root(DST), ignore_errors=True)
+    docs_src = [table_path(DST, "documents")]
+    shutil.rmtree(artifact_path(_PST_KIND, docs_src), ignore_errors=True)
     t0 = time.perf_counter()
     name, n_docs, avgdl = ensure_postings_index(spark, DST)
     results["postings_build"] = time.perf_counter() - t0
     print(f"  postings build (once per corpus): "
           f"{results['postings_build']:.2f}s", flush=True)
-    shutil.rmtree(_pos_root(DST), ignore_errors=True)
+    shutil.rmtree(artifact_path(_POS_KIND, docs_src), ignore_errors=True)
     t0 = time.perf_counter()
     pos_name = ensure_positional_index(spark, DST)
     results["positions_build"] = time.perf_counter() - t0
@@ -606,13 +609,18 @@ def main() -> None:
 
     print("== 5. postings store on the zipf corpus ==", flush=True)
     from emails_to_vector_db_spark.plans.postings import (
+        _PST_KIND,
         _bm25_term_score,
-        _pst_root,
         ensure_postings_index,
     )
+    from emails_to_vector_db_spark.sources.tables import table_path
+    from emails_to_vector_db_spark.sources.warehouse import artifact_path
     import shutil
 
-    shutil.rmtree(_pst_root(DST), ignore_errors=True)
+    shutil.rmtree(
+        artifact_path(_PST_KIND, [table_path(DST, "documents")]),
+        ignore_errors=True,
+    )
     t0 = time.perf_counter()
     name, n_docs, avgdl = ensure_postings_index(spark, DST)
     spark.sql(f"DROP TABLE IF EXISTS {name}")

@@ -9,8 +9,13 @@ from emails_to_vector_db_spark.operators.ivf import (
     train_centroids,
 )
 from emails_to_vector_db_spark.operators.similarity import brute_force_join
-from emails_to_vector_db_spark.sources.tables import load_table
-from emails_to_vector_db_spark.sources.warehouse import write_bucketed
+from emails_to_vector_db_spark.sources import warehouse
+from emails_to_vector_db_spark.sources.tables import load_table, table_path
+from emails_to_vector_db_spark.sources.warehouse import (
+    artifact_path,
+    publish_json,
+    write_bucketed,
+)
 from tests.conftest import SF_SMOKE
 
 
@@ -54,24 +59,22 @@ def test_ivf_deterministic(spark):
     assert r1 == r2
 
 
-def test_numpy_kmeans_deterministic_and_persistable(tmp_path):
+def test_numpy_kmeans_deterministic_and_persistable(tmp_path, monkeypatch):
     import numpy as np
 
-    from emails_to_vector_db_spark.operators.ivf import (
-        load_centroids,
-        save_centroids,
-        train_centroids_numpy,
-    )
+    from emails_to_vector_db_spark.operators.ivf import train_centroids_numpy
 
     rng = np.random.default_rng(0)
     X = rng.standard_normal((200, 8))
     c1 = train_centroids_numpy(X, n_centroids=4, seed=7)
     c2 = train_centroids_numpy(X, n_centroids=4, seed=7)
     assert c1 == c2  # bit-for-bit reproducible from (sample, seed)
-    path = str(tmp_path / "idx" / "cents.json")
-    save_centroids(path, c1)
-    assert load_centroids(path) == c1
-    assert load_centroids(str(tmp_path / "missing.json")) is None
+    monkeypatch.setattr(warehouse, "WAREHOUSE", str(tmp_path / "wh"))
+    src = tmp_path / "sample.parquet"
+    src.write_bytes(b"x")
+    # nothing published yet → trained; then loaded, not retrained
+    assert publish_json("cents", [str(src)], lambda: c1) == c1
+    assert publish_json("cents", [str(src)], lambda: 1 / 0) == c1
 
 
 def test_registered_ivf_query_uses_persisted_index():
@@ -82,37 +85,45 @@ def test_registered_ivf_query_uses_persisted_index():
     from emails_to_vector_db_spark.plans.vector import (
         _embeddings_rows,
         _ivf_centroids,
-        _ivf_index_path,
         _ivf_k,
+        _IVF_SEED,
         _ORACLE_SF_DIR,
     )
 
     k = _ivf_k(_embeddings_rows(_ORACLE_SF_DIR))
     c1 = _ivf_centroids(k, _ORACLE_SF_DIR)
     # persisted artifact on disk, keyed by corpus + k
-    assert os.path.exists(_ivf_index_path(k, _ORACLE_SF_DIR))
+    assert os.path.isdir(
+        artifact_path(
+            f"ivf_index_k{k}_seed{_IVF_SEED}",
+            [table_path(_ORACLE_SF_DIR, "embeddings")],
+        )
+    )
     assert _ivf_centroids(k, _ORACLE_SF_DIR) == c1
     assert len(c1) == 16 and len(c1[0]) == 64  # fixture-scale quantizer
 
 
-def test_quantizer_artifact_is_provenance_checked(tmp_path):
+def test_quantizer_artifact_is_provenance_checked(tmp_path, monkeypatch):
     """A persisted quantizer trained on a DIFFERENT source (basename
     collision) or an OLDER mtime (regenerated fixture) must miss, not
     silently serve stale centroids — the r9 ADVICE hazard."""
-    from emails_to_vector_db_spark.operators.ivf import (
-        load_quantizer,
-        save_quantizer,
-    )
+    import os
 
-    path = str(tmp_path / "q.json")
-    src = str(tmp_path / "embeddings.parquet")
-    save_quantizer(path, [[0.0, 1.0]], src=src, src_mtime=100.0, n_sample=4)
-    assert load_quantizer(path, src=src, src_mtime=100.0) == [[0.0, 1.0]]
+    monkeypatch.setattr(warehouse, "WAREHOUSE", str(tmp_path / "wh"))
+    src = tmp_path / "embeddings.parquet"
+    src.write_bytes(b"x")
+    os.utime(src, (100.0, 100.0))
+    assert publish_json("q", [str(src)], lambda: [[0.0, 1.0]]) == [[0.0, 1.0]]
+    assert publish_json("q", [str(src)], lambda: 1 / 0) == [[0.0, 1.0]]
     # regenerated source (new mtime) → miss
-    assert load_quantizer(path, src=src, src_mtime=200.0) is None
+    os.utime(src, (200.0, 200.0))
+    assert publish_json("q", [str(src)], lambda: [[2.0]]) == [[2.0]]
     # same basename, different corpus dir → miss
-    other = str(tmp_path / "elsewhere" / "embeddings.parquet")
-    assert load_quantizer(path, src=other, src_mtime=100.0) is None
+    other = tmp_path / "elsewhere" / "embeddings.parquet"
+    other.parent.mkdir()
+    other.write_bytes(b"x")
+    os.utime(other, (200.0, 200.0))
+    assert publish_json("q", [str(other)], lambda: [[3.0]]) == [[3.0]]
 
 
 def test_training_sample_scales_with_quantizer_size():

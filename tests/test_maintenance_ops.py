@@ -13,7 +13,6 @@ from emails_to_vector_db_spark.plans.maintenance import (
     _MV_CUTOFF,
     _Z_BUCKET_SHIFT,
     _ensure_mv,
-    _mv_path,
 )
 from emails_to_vector_db_spark.sources.tables import load_table
 from tests.conftest import SF_ORACLE
@@ -51,12 +50,10 @@ def test_mv_refresh_equals_full_recompute(spark):
 
 
 def test_mv_materialization_is_reused(spark):
-    path = _mv_path(SF_ORACLE)
-    _ensure_mv(spark, SF_ORACLE)
-    marker = os.path.join(path, "_SOURCE_MTIME")
-    mtime_before = os.path.getmtime(marker)
-    _ensure_mv(spark, SF_ORACLE)  # second call must not rebuild
-    assert os.path.getmtime(marker) == mtime_before
+    path = _ensure_mv(spark, SF_ORACLE)
+    mtime_before = os.stat(path).st_mtime_ns
+    assert _ensure_mv(spark, SF_ORACLE) == path  # must not rebuild
+    assert os.stat(path).st_mtime_ns == mtime_before
 
 
 def test_mv_delta_is_nonempty_and_partial(spark):

@@ -5,7 +5,6 @@ lifecycle pinned in tests/test_ivf_bucketing.py)."""
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 
@@ -14,11 +13,16 @@ from pyspark.sql import functions as F
 
 from emails_to_vector_db_spark.plans import REGISTRY
 from emails_to_vector_db_spark.plans.postings import (
-    _pst_root,
-    _pst_table_name,
+    _PST_KIND,
     ensure_postings_index,
 )
+from emails_to_vector_db_spark.sources.tables import table_path
+from emails_to_vector_db_spark.sources.warehouse import artifact_path
 from tests.conftest import SF_ORACLE, SF_SMOKE
+
+
+def _pst_dir(sf_dir: str) -> str:
+    return artifact_path(_PST_KIND, [table_path(sf_dir, "documents")])
 
 
 def _plan(df) -> str:
@@ -171,42 +175,33 @@ def test_phrase_index_twin_matches_inline(spark):
 
 def test_postings_staleness_rebuild(spark, tmp_path):
     """A regenerated fixture (newer documents.parquet mtime) must
-    rebuild the index; an unchanged fixture must NOT rewrite it."""
+    rebuild the index under a new fingerprint; an unchanged fixture must
+    NOT rewrite it."""
     sf_dir = str(tmp_path / "sfX")
     os.makedirs(sf_dir)
-    shutil.copy(
-        os.path.join(SF_SMOKE, "documents.parquet"),
-        os.path.join(sf_dir, "documents.parquet"),
-    )
+    src = os.path.join(sf_dir, "documents.parquet")
+    shutil.copy(os.path.join(SF_SMOKE, "documents.parquet"), src)
     name, n_docs, avgdl = ensure_postings_index(spark, sf_dir)
     assert n_docs > 0 and avgdl > 0
     first = spark.table(name).count()
-    marker = os.path.join(_pst_root(sf_dir), "_SOURCE_MTIME")
-    with open(marker) as f:
-        recorded = f.read()
+    stats = os.path.join(_pst_dir(sf_dir), "stats.json")
+    recorded = os.stat(stats).st_mtime_ns
 
-    # unchanged source: ensure() is a no-op (marker not rewritten)
-    ensure_postings_index(spark, sf_dir)
-    with open(marker) as f:
-        assert f.read() == recorded
+    # unchanged source: ensure() is a no-op (nothing rewritten)
+    assert ensure_postings_index(spark, sf_dir)[0] == name
+    assert os.stat(stats).st_mtime_ns == recorded
 
-    # regenerated source: must rebuild
-    os.utime(
-        os.path.join(sf_dir, "documents.parquet"),
-        (os.path.getmtime(os.path.join(sf_dir, "documents.parquet")) + 10,)
-        * 2,
-    )
+    # regenerated source: must rebuild, under a new fingerprint
+    old_dir = _pst_dir(sf_dir)
+    os.utime(src, (os.path.getmtime(src) + 10,) * 2)
     name2, n2, _ = ensure_postings_index(spark, sf_dir)
-    assert name2 == name and n2 == n_docs
-    assert spark.table(name).count() == first
-    with open(marker) as f:
-        rebuilt = json.load(f)
-    assert rebuilt["mtime"] > json.loads(recorded)["mtime"]
-    # v2 marker records WHICH source it was built from
-    assert rebuilt["src"] == os.path.join(sf_dir, "documents.parquet")
+    assert name2 != name and n2 == n_docs
+    assert spark.table(name2).count() == first
+    assert _pst_dir(sf_dir) != old_dir and not os.path.exists(old_dir)
 
     spark.sql(f"DROP TABLE IF EXISTS {name}")
-    shutil.rmtree(_pst_root(sf_dir), ignore_errors=True)
+    spark.sql(f"DROP TABLE IF EXISTS {name2}")
+    shutil.rmtree(_pst_dir(sf_dir), ignore_errors=True)
 
 
 def test_postings_cold_catalog_ddl_replay(spark):
@@ -215,7 +210,7 @@ def test_postings_cold_catalog_ddl_replay(spark):
     table serves identical stats and rows."""
     name, n_docs, avgdl = ensure_postings_index(spark, SF_ORACLE)
     rows_before = spark.table(name).count()
-    pst_dir = os.path.join(_pst_root(SF_ORACLE), "postings")
+    pst_dir = os.path.join(_pst_dir(SF_ORACLE), "table")
     mtime_before = os.path.getmtime(pst_dir)
     spark.sql(f"DROP TABLE IF EXISTS {name}")
 
@@ -228,9 +223,9 @@ def test_postings_cold_catalog_ddl_replay(spark):
 
 
 def test_cold_catalog_with_missing_data_rebuilds(spark, tmp_path):
-    """r9 ADVICE: marker+stats present but the parquet data directory
-    gone (partial warehouse cleanup) must REBUILD, not replay DDL over
-    a missing LOCATION and silently scan empty."""
+    """r9 ADVICE: the published store gone (warehouse cleanup) must
+    REBUILD, not replay DDL over a missing LOCATION and silently scan
+    empty — with a cold catalog and with the table still registered."""
     sf_dir = str(tmp_path / "sfY")
     os.makedirs(sf_dir)
     shutil.copy(
@@ -241,23 +236,25 @@ def test_cold_catalog_with_missing_data_rebuilds(spark, tmp_path):
     rows = spark.table(name).count()
     assert rows > 0
     spark.sql(f"DROP TABLE IF EXISTS {name}")  # cold catalog
-    shutil.rmtree(os.path.join(_pst_root(sf_dir), "postings"))  # lost data
+    shutil.rmtree(_pst_dir(sf_dir))  # lost data
 
     name2, n2, _ = ensure_postings_index(spark, sf_dir)
     assert n2 == n_docs
     assert spark.table(name2).count() == rows  # rebuilt, not empty
-    spark.sql(f"DROP TABLE IF EXISTS {name2}")
-    shutil.rmtree(_pst_root(sf_dir), ignore_errors=True)
+
+    shutil.rmtree(_pst_dir(sf_dir))  # lost data under a live registration
+    name3, _, _ = ensure_postings_index(spark, sf_dir)
+    assert spark.table(name3).count() == rows
+    spark.sql(f"DROP TABLE IF EXISTS {name3}")
+    shutil.rmtree(_pst_dir(sf_dir), ignore_errors=True)
 
 
 def test_marker_is_source_specific(tmp_path):
-    """A v2 marker written for one corpus must read stale for another
-    corpus whose documents.parquet happens to be OLDER (the exact
-    basename-collision serving bug from the r9 ADVICE)."""
-    from emails_to_vector_db_spark.plans.postings import (
-        _marker_fresh,
-        _write_marker,
-    )
+    """An artifact published for one corpus is never served for another
+    corpus whose documents.parquet shares the basename and happens to be
+    OLDER (the exact basename-collision serving bug from the r9
+    ADVICE), and a moved mtime names a new directory."""
+    from emails_to_vector_db_spark.sources.warehouse import publish
 
     a = tmp_path / "a"
     b = tmp_path / "b"
@@ -266,14 +263,17 @@ def test_marker_is_source_specific(tmp_path):
         (d / "documents.parquet").write_bytes(b"x")
     # b is OLDER than a → the legacy mtime-only check would read fresh
     os.utime(b / "documents.parquet", (1000.0, 1000.0))
-    marker = str(tmp_path / "_SOURCE_MTIME")
-    _write_marker(marker, str(a / "documents.parquet"))
-    assert _marker_fresh(marker, str(a / "documents.parquet"))
-    assert not _marker_fresh(marker, str(b / "documents.parquet"))
-    # legacy bare-float marker → stale (forces one rebuild, never serves)
-    with open(marker, "w") as f:
-        f.write("9999999999.0")
-    assert not _marker_fresh(marker, str(a / "documents.parquet"))
+    src_a, src_b = str(a / "documents.parquet"), str(b / "documents.parquet")
+    kind = "test_source_specific"
+    built = []
+    pa = publish(kind, [src_a], built.append)
+    pb = publish(kind, [src_b], built.append)
+    assert pa != pb and len(built) == 2
+    # same content, new mtime → a new directory, never the old one
+    os.utime(src_a, (2000.0, 2000.0))
+    assert artifact_path(kind, [src_a]) != pa
+    for d in (pa, pb):
+        shutil.rmtree(os.path.dirname(d), ignore_errors=True)
 
 
 def test_postings_df_and_impact_rank_consistency(spark):
@@ -337,8 +337,8 @@ def test_streamed_store_warm_across_calls_and_stale_restream(
 ):
     """Round-11 (r10 verdict task 2 / ADVICE): the streamed store must
     be WARM — a second invocation returns the persisted store without
-    re-driving the micro-batch ingest (marker untouched, work dir not
-    rebuilt) — and a STALE landing (source parquet regenerated) must
+    re-driving the micro-batch ingest (published dir not rebuilt) — and
+    a STALE landing (source parquet regenerated) must
     re-stream LOUDLY (stderr names the mismatch) rather than serve rows
     for vanished data."""
     from emails_to_vector_db_spark.plans import postings as P
@@ -350,15 +350,13 @@ def test_streamed_store_warm_across_calls_and_stale_restream(
     )
     tf1, pos1 = P._run_stream_postings(spark, d)
     work = os.path.dirname(tf1)
-    marker = os.path.join(work, "_STREAMED_OK")
-    assert os.path.exists(marker)
-    m0 = os.path.getmtime(marker)
+    m0 = os.stat(work).st_mtime_ns
     rows0 = sorted(map(tuple, spark.read.parquet(pos1).collect()))
 
     capsys.readouterr()
     tf2, pos2 = P._run_stream_postings(spark, d)
     assert (tf2, pos2) == (tf1, pos1)
-    assert os.path.getmtime(marker) == m0, "warm call rebuilt the store"
+    assert os.stat(work).st_mtime_ns == m0, "warm call rebuilt the store"
     assert "re-streaming" not in capsys.readouterr().err
 
     # regenerate the source (newer mtime) → loud re-stream
@@ -367,7 +365,8 @@ def test_streamed_store_warm_across_calls_and_stale_restream(
     capsys.readouterr()
     tf3, pos3 = P._run_stream_postings(spark, d)
     assert "re-streaming" in capsys.readouterr().err
-    assert os.path.getmtime(marker) > m0, "stale landing was served warm"
+    assert os.path.dirname(tf3) != work, "stale landing was served warm"
+    assert not os.path.exists(work), "superseded store left behind"
     assert rows0 == sorted(map(tuple, spark.read.parquet(pos3).collect()))
 
 
@@ -404,7 +403,6 @@ def test_drift_plan_actions_flip_with_append_vocabulary(spark, tmp_path):
       'rebuild'
     - a single tiny append (sparse id space) → 'keep' everywhere."""
     from emails_to_vector_db_spark.plans.postings import (
-        _pst_root,
         postings_vocab_rebuild_plan,
     )
 
@@ -413,7 +411,7 @@ def test_drift_plan_actions_flip_with_append_vocabulary(spark, tmp_path):
         acts = {r["action"] for r in df.collect()}
         name, _, _ = ensure_postings_index(spark, sf_dir)
         spark.sql(f"DROP TABLE IF EXISTS {name}")
-        shutil.rmtree(_pst_root(sf_dir), ignore_errors=True)
+        shutil.rmtree(_pst_dir(sf_dir), ignore_errors=True)
         return acts
 
     # heavy same-vocab appends: base-term buckets' growth 80/30 ≫ τ
@@ -442,3 +440,33 @@ def test_drift_plan_actions_flip_with_append_vocabulary(spark, tmp_path):
         [(i, "alpha beta gamma") for i in range(60)] + [(1001, "alpha")],
     )
     assert actions(sparse) == {"keep"}
+
+
+@pytest.mark.filterwarnings("error::FutureWarning")
+def test_trihybrid_sweep_batch_has_explicit_dtypes():
+    """trihybrid_rrf_from_index's sweep batch concatenates the per-qi
+    top-m with the τ rows under explicit dtypes: a batch with no
+    τ-qualified term, or no term at all, raises no pandas FutureWarning
+    and keeps (object, int32, float64)."""
+    from collections import Counter
+
+    from emails_to_vector_db_spark.plans.postings import (
+        _CB_DIM,
+        _gram_hashes,
+        _trihybrid_sweep_batch,
+    )
+
+    hl, nrm = _gram_hashes("alpha")
+    unit = [0.0] * _CB_DIM
+    for h, c in Counter(hl).items():
+        unit[h] = c / nrm
+    want = {"term": "object", "qi": "int32", "sim": "float64"}
+    for terms, qvecs, n_tau in (
+        (["alpha"], {1: unit}, 1),  # its sim is 1.0 ≥ τ
+        (["beta", "gamma"], {1: [0.0] * _CB_DIM}, 0),  # no τ row
+        ([], {1: unit}, 0),  # empty batch
+    ):
+        df = _trihybrid_sweep_batch(terms, qvecs)
+        assert {c: str(t) for c, t in df.dtypes.items()} == want
+        assert (df["qi"] == 0).sum() == n_tau
+        assert len(df) == len(terms) + n_tau

@@ -18,7 +18,7 @@ from emails_to_vector_db_spark.plans.semantic import (
     semantic_pruned_ids,
 )
 from emails_to_vector_db_spark.plans import REGISTRY
-from tests.conftest import SF_ORACLE
+from tests.conftest import SF_ORACLE, SF_SMOKE
 
 
 def test_semantic_dedup_prunes_every_planted_copy(spark):
@@ -90,25 +90,20 @@ def test_pq_recall_vs_exact(spark):
     assert pq_ids == list(pq_order[:5])
 
 
-def test_pq_codebooks_persisted_and_deterministic(tmp_path):
-    from emails_to_vector_db_spark.operators.pq import (
-        load_codebooks,
-        save_codebooks,
-        train_pq_codebooks,
-    )
+def test_pq_codebooks_persisted_and_deterministic(tmp_path, monkeypatch):
+    from emails_to_vector_db_spark.operators.pq import train_pq_codebooks
+    from emails_to_vector_db_spark.sources import warehouse
 
-    t = papq.read_table(
-        "/root/testdata/sf0.001/embeddings.parquet",
-        columns=["vec_id", "embedding"],
-    )
+    src = f"{SF_SMOKE}/embeddings.parquet"
+    t = papq.read_table(src, columns=["vec_id", "embedding"])
     vecs = t.sort_by("vec_id").to_pydict()["embedding"]
     a = train_pq_codebooks(vecs, m=4, k=8, seed=3)
     b = train_pq_codebooks(vecs, m=4, k=8, seed=3)
     assert a == b, "training not deterministic"
     assert len(a) == 4 and all(len(cb) == 8 for cb in a)
-    p = str(tmp_path / "cb.json")
-    save_codebooks(p, a)
-    assert load_codebooks(p) == a
+    monkeypatch.setattr(warehouse, "WAREHOUSE", str(tmp_path))
+    assert warehouse.publish_json("cb", [src], lambda: a) == a
+    assert warehouse.publish_json("cb", [src], lambda: 1 / 0) == a
     # different subspaces trained with different seeds -> different books
     assert a[0] != a[1]
 

@@ -68,3 +68,15 @@ def test_tmpfs_is_opt_in(monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_LOCAL_DIR", "/mnt/nvme0/scratch")
     S.use_tmpfs_scratch()
     assert os.environ["SPARK_GRAFT_LOCAL_DIR"] == "/mnt/nvme0/scratch"
+
+
+def test_driver_memory_default_fits_host(monkeypatch):
+    """Unset, spark.driver.memory is sized from MemTotal and never
+    exceeds it; set, $SPARK_GRAFT_DRIVER_MEM wins verbatim."""
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    with open("/proc/meminfo") as f:
+        total_kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    mem = S._driver_mem()
+    assert mem.endswith("m") and int(mem[:-1]) * 1024 <= total_kb
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "6g")
+    assert S._driver_mem() == "6g"

@@ -273,7 +273,7 @@ def test_bucketed_join_has_no_shuffle_before_join(spark):
     from emails_to_vector_db_spark.plans import REGISTRY
     from emails_to_vector_db_spark.plans.bucketed import (
         BUCKETS,
-        _bucket_root,
+        ensure_bucketed_table,
     )
     from tests.conftest import SF_ORACLE
 
@@ -291,9 +291,10 @@ def test_bucketed_join_has_no_shuffle_before_join(spark):
     assert "SortMergeJoin" in plan
     assert "Bucketed: true" in plan
     assert f"SelectedBucketsCount: {BUCKETS} out of {BUCKETS}" in plan
-    for tbl in ("lineitem", "orders"):
+    for tbl, key in (("lineitem", "l_orderkey"), ("orders", "o_orderkey")):
+        name = ensure_bucketed_table(spark, SF_ORACLE, tbl, key)
         files = _glob.glob(
-            os.path.join(_bucket_root(SF_ORACLE, tbl), "*.parquet")
+            os.path.join(_table_location(spark, name), "*.parquet")
         )
         assert len(files) == BUCKETS, (
             f"{tbl}: want one file per bucket, got {len(files)}"
@@ -306,21 +307,20 @@ def test_bucketed_table_reregisters_without_rewrite(spark):
     import os
 
     from emails_to_vector_db_spark.plans.bucketed import (
-        _bucket_root,
-        _table_name,
         ensure_bucketed_table,
     )
     from tests.conftest import SF_ORACLE
 
     name = ensure_bucketed_table(spark, SF_ORACLE, "orders", "o_orderkey")
-    root = _bucket_root(SF_ORACLE, "orders")
+    root = _table_location(spark, name)
     before = {
         f: os.path.getmtime(os.path.join(root, f)) for f in os.listdir(root)
     }
     # simulate a fresh session's empty catalog
-    spark.sql(f"DROP TABLE IF EXISTS {_table_name(SF_ORACLE, 'orders')}")
+    spark.sql(f"DROP TABLE IF EXISTS {name}")
     name2 = ensure_bucketed_table(spark, SF_ORACLE, "orders", "o_orderkey")
     assert name2 == name
+    assert _table_location(spark, name2) == root
     after = {
         f: os.path.getmtime(os.path.join(root, f)) for f in os.listdir(root)
     }
@@ -439,3 +439,12 @@ def test_store_time_travel_snapshots(spark, tmp_path):
         store.read(version=0)
     with pytest.raises(ValueError, match="retain must be >= 1"):
         store.compact(retain=0)
+
+
+def _table_location(spark, name: str) -> str:
+    loc = next(
+        r.data_type
+        for r in spark.sql(f"DESCRIBE TABLE EXTENDED {name}").collect()
+        if r.col_name == "Location"
+    )
+    return loc.removeprefix("file:")

@@ -30,7 +30,8 @@ store lives in a directory named by a fingerprint of documents.parquet
 (absolute path, mtime, size) and its catalog name carries the same
 fingerprint — a regenerated fixture names a new store and rebuilds,
 never silently serving old rows. A fresh session over current files
-replays only CREATE TABLE DDL.
+replays only CREATE TABLE DDL; a published store whose table files were
+lost is rebuilt instead, never registered over an empty location.
 
 Doc-grain lookups (RM3's feedback-doc term distributions) deliberately
 do NOT read this store: postings are term-bucketed, so a doc_id probe
@@ -2615,16 +2616,6 @@ def _trigram_sims(
     ]
 
 
-def _trigram_max_sim(t: str, qvecs: dict[int, list[float]]) -> float:
-    """max over query tokens of _trigram_sims(t, qvecs), without the
-    per-(term, qi) tuples — the SPLADE lane's expansion weight."""
-    hl, nrm = _gram_hashes(t)
-    return max(
-        math.floor((sum(map(qv.__getitem__, hl)) / nrm) * 1e6 + 0.5) / 1e6
-        for qv in qvecs.values()
-    )
-
-
 def _trihybrid_sweep_batch(terms, qvecs: dict[int, list[float]]):
     """One batch of trihybrid_rrf_from_index's shared lexicon sweep: the
     batch-local per-qi top-m (sim desc, term asc) plus one qi=0 row per
@@ -2722,7 +2713,7 @@ def splade_expansion_from_index(
             out_t: list = []
             out_w: list = []
             for t in pdf["term"]:
-                best = _trigram_max_sim(t, qvecs)
+                best = max(s for _, s in _trigram_sims(t, qvecs))
                 if best >= _SPL_TAU:
                     out_t.append(t)
                     out_w.append(best)

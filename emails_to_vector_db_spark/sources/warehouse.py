@@ -19,9 +19,11 @@ join is delegated SQL; SURVEY.md §2.3).
 
 from __future__ import annotations
 
+import glob
 import hashlib
 import json
 import os
+import re
 import shutil
 import tempfile
 from typing import Any, Callable, Sequence
@@ -32,6 +34,9 @@ WAREHOUSE = os.path.join(
     os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
     "spark-warehouse",
 )
+# published dirs get the mode os.makedirs would give them (mkdtemp's is 0700)
+_UMASK = os.umask(0)
+os.umask(_UMASK)
 
 
 def _files(source: str) -> list[str]:
@@ -58,9 +63,11 @@ def artifact_path(kind: str, sources: Sequence[str]) -> str:
 
 def superseded(kind: str, sources: Sequence[str]) -> list[str]:
     """Published ``kind`` directories of the same sources at an older
-    state (the sources changed since they were built)."""
+    state (the sources changed since they were built). Only exact
+    ``<corpus>_<state>`` names match: a sibling such as a streaming
+    query's ``<name>__run`` work dir is never listed."""
     parent, name = os.path.split(artifact_path(kind, sources))
-    corpus = name.split("_")[0] + "_"
+    own = re.compile(re.escape(name.split("_")[0]) + r"_[0-9a-f]{10}")
     try:
         entries = os.listdir(parent)
     except FileNotFoundError:
@@ -68,7 +75,7 @@ def superseded(kind: str, sources: Sequence[str]) -> list[str]:
     return sorted(
         os.path.join(parent, e)
         for e in entries
-        if e.startswith(corpus) and e != name
+        if own.fullmatch(e) and e != name
     )
 
 
@@ -90,7 +97,8 @@ def publish(kind: str, sources: Sequence[str], build: Callable[[str], Any]) -> s
     ``os.rename`` publishes it. When another process publishes first the
     rename fails and this build is discarded. Temp dirs of builds whose
     process died are swept, and a successful publish removes the
-    directories of the same sources it supersedes."""
+    directories of the same sources it supersedes (and their
+    ``<dir>__*`` work dirs)."""
     path = artifact_path(kind, sources)
     if os.path.isdir(path):
         return path
@@ -103,6 +111,7 @@ def publish(kind: str, sources: Sequence[str], build: Callable[[str], Any]) -> s
     tmp = tempfile.mkdtemp(prefix=f".{name}.{os.getpid()}.", dir=parent)
     try:
         build(tmp)
+        os.chmod(tmp, 0o777 & ~_UMASK)
         try:
             os.rename(tmp, path)
         except OSError:
@@ -112,7 +121,9 @@ def publish(kind: str, sources: Sequence[str], build: Callable[[str], Any]) -> s
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
     for old in superseded(kind, sources):
-        shutil.rmtree(old, ignore_errors=True)
+        # with the work dirs of that state's streaming queries
+        for d in [old, *glob.glob(glob.escape(old) + "__*")]:
+            shutil.rmtree(d, ignore_errors=True)
     return path
 
 
@@ -159,6 +170,12 @@ def publish_landing(
     return publish(kind, [src], build)
 
 
+def _has_data(table: str) -> bool:
+    return os.path.isdir(table) and any(
+        not f.startswith(("_", ".")) for f in os.listdir(table)
+    )
+
+
 def publish_bucketed(
     spark: SparkSession,
     kind: str,
@@ -175,6 +192,11 @@ def publish_bucketed(
     current files; a cold one replays one ``CREATE TABLE … LOCATION``
     from the column list saved beside the table (no schema-inference
     job, no data movement)."""
+    path = artifact_path(kind, sources)
+    if os.path.isdir(path) and not _has_data(os.path.join(path, "table")):
+        # the table's files were lost from a published dir (a partial
+        # cleanup): DDL over that LOCATION would silently scan empty
+        shutil.rmtree(path, ignore_errors=True)
     rebuilt = []
 
     def build(d: str) -> None:

@@ -223,9 +223,11 @@ def test_postings_cold_catalog_ddl_replay(spark):
 
 
 def test_cold_catalog_with_missing_data_rebuilds(spark, tmp_path):
-    """r9 ADVICE: the published store gone (warehouse cleanup) must
-    REBUILD, not replay DDL over a missing LOCATION and silently scan
-    empty — with a cold catalog and with the table still registered."""
+    """r9 ADVICE: the store's data directory gone while the published
+    dir and its stats stay (partial warehouse cleanup), or the whole
+    published dir gone, must REBUILD, not replay DDL over a missing
+    LOCATION and silently scan empty — with a cold catalog and with the
+    table still registered."""
     sf_dir = str(tmp_path / "sfY")
     os.makedirs(sf_dir)
     shutil.copy(
@@ -236,7 +238,15 @@ def test_cold_catalog_with_missing_data_rebuilds(spark, tmp_path):
     rows = spark.table(name).count()
     assert rows > 0
     spark.sql(f"DROP TABLE IF EXISTS {name}")  # cold catalog
-    shutil.rmtree(_pst_dir(sf_dir))  # lost data
+    shutil.rmtree(os.path.join(_pst_dir(sf_dir), "table"))  # lost data only
+    assert os.path.isfile(os.path.join(_pst_dir(sf_dir), "stats.json"))
+
+    name1, n1, _ = ensure_postings_index(spark, sf_dir)
+    assert n1 == n_docs
+    assert spark.table(name1).count() == rows  # rebuilt, not empty
+
+    spark.sql(f"DROP TABLE IF EXISTS {name1}")  # cold catalog
+    shutil.rmtree(_pst_dir(sf_dir))  # lost published dir
 
     name2, n2, _ = ensure_postings_index(spark, sf_dir)
     assert n2 == n_docs

@@ -121,6 +121,29 @@ def test_moved_source_rebuilds_and_prunes(wh):
     assert superseded("k", [wh]) == []
 
 
+def test_superseded_spares_sibling_work_dirs(wh):
+    """A streaming query's ``<landing>__run`` work dir sits beside the
+    landing in its kind dir: it is never taken for a superseded state,
+    and goes only with the landing it belongs to."""
+    p1 = publish("k", [wh], lambda d: None)
+    os.makedirs(p1 + "__run")
+    os.utime(wh, (os.path.getmtime(wh) + 10,) * 2)
+    assert superseded("k", [wh]) == [p1]
+    p2 = publish("k", [wh], lambda d: None)
+    os.makedirs(p2 + "__run")
+    assert not os.path.exists(p1) and not os.path.exists(p1 + "__run")
+    assert superseded("k", [wh]) == []
+    assert publish("k", [wh], lambda d: None) == p2
+    assert os.path.isdir(p2 + "__run")
+
+
+def test_published_dir_mode_follows_umask(wh):
+    umask = os.umask(0)
+    os.umask(umask)
+    path = publish("k", [wh], lambda d: None)
+    assert os.stat(path).st_mode & 0o777 == 0o777 & ~umask
+
+
 def test_moved_source_rebuilds_real_site(spark, tmp_path):
     from emails_to_vector_db_spark.plans.postings import _stream_pst_landing
 

@@ -24,7 +24,7 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from emails_to_vector_db_spark.functions.vector import distance, vector_lit
+from emails_to_vector_db_spark.functions.vector import distance
 
 
 def n_centroids_for(
@@ -189,10 +189,6 @@ def hash_sample_vectors(
             kept_vecs.extend(vecs[i] for i in idx)
     order = np.argsort(np.concatenate(kept_ids), kind="stable")
     return [kept_vecs[i] for i in order]
-
-
-def _dist_to(vec_col: Column, centroid: list[float]) -> Column:
-    return distance("sqeuclidean", vec_col, vector_lit(centroid))
 
 
 def _centroid_entries(

@@ -21,7 +21,7 @@ from typing import Iterator, Sequence
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType
 
@@ -123,15 +123,4 @@ def train_pca_numpy(
         [round(float(v), 8) for v in mu],
         [[round(float(c), 8) for c in comps[:, j]] for j in range(comps.shape[1])],
         [round(float(e), 8) for e in w],
-    )
-
-
-def dot_literal(vec_col: Column | str, vec: Sequence[float]) -> Column:
-    """dot(column, literal vector) as a single codegen-able fold."""
-    c = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    lit = F.array(*[F.lit(float(x)) for x in vec])
-    return F.aggregate(
-        F.zip_with(c.cast("array<double>"), lit, lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
     )

@@ -28,6 +28,8 @@ NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
 # OOM a production node (r11 verdict "What's wrong" #1).
 TMPFS_SCRATCH = "/dev/shm/spark-local"
 
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def use_tmpfs_scratch() -> None:
     """Opt this process into tmpfs shuffle scratch (bench/measurement
@@ -148,6 +150,11 @@ def get_spark(
         .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
         .config("spark.driver.memory", _driver_mem())
         .config(NANOS_AS_LONG, "true")
+        # The engine's daemon skips the per-task re-read of pyspark.zip
+        # (see pyworker.py); the package's parent dir on the workers'
+        # path lets the daemon import from any driver cwd.
+        .config("spark.python.daemon.module", "emails_to_vector_db_spark.pyworker")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     if local_dir:
         builder = builder.config("spark.local.dir", local_dir)

@@ -98,7 +98,12 @@ def publish(kind: str, sources: Sequence[str], build: Callable[[str], Any]) -> s
     rename fails and this build is discarded. Temp dirs of builds whose
     process died are swept, and a successful publish removes the
     directories of the same sources it supersedes (and their
-    ``<dir>__*`` work dirs)."""
+    ``<dir>__*`` work dirs).
+
+    The fingerprint covers only ``kind`` and its sources, never the code
+    of ``build``: a change to what a builder writes must bump the kind's
+    ``_vN`` suffix (as in ``postings_v2``), or a warm warehouse keeps
+    serving the artifact the old builder wrote."""
     path = artifact_path(kind, sources)
     if os.path.isdir(path):
         return path
@@ -255,11 +260,6 @@ def write_bucketed(
     if sort_cols:
         writer = writer.sortBy(*sort_cols)
     writer.saveAsTable(table)
-
-
-def bucketed_join_ready(spark: SparkSession, left: str, right: str, on: str):
-    """Read two bucketed tables for an exchange-free join on ``on``."""
-    return spark.table(left), spark.table(right), on
 
 
 def merge_upsert(

@@ -134,21 +134,6 @@ def deduped_stream(
     )
 
 
-def run_stream_to_memory(
-    df: DataFrame, name: str, *, timeout_sec: int = 120
-) -> None:
-    """Test helper: run an unstarted streaming DF to completion (all files
-    of the bounded file source) into an in-memory table named ``name``."""
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete" if df.isStreaming else "append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout_sec)
-
-
 def stream_embed_to_store(
     texts_stream: DataFrame,
     store,

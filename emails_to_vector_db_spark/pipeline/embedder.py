@@ -19,7 +19,6 @@ interface and is never imported unless requested (SURVEY.md §5.3).
 from __future__ import annotations
 
 import hashlib
-import math
 from typing import Protocol
 
 import numpy as np
@@ -42,21 +41,32 @@ def _hash_embed_batch(texts: pd.Series, dim: int) -> pd.Series:
 
     Same construction as the oracle-checkable SQL embedder in
     plans/pipeline.py (token -> md5 bucket), vectorized over the Arrow
-    batch. Uses md5, never Python's salted hash()."""
-    out = []
-    for t in texts:
-        vec = np.zeros(dim, dtype=np.float64)
-        if t:
-            for tok in t.split():
+    batch: each distinct token is hashed once per batch, and one
+    ``bincount`` builds the (rows, dim) count matrix. Uses md5, never
+    Python's salted hash(). Counts are small integers, so the squared
+    norms are exact in float64 and the result is bit-identical to
+    normalizing each row on its own."""
+    buckets: dict[str, int] = {}
+    cells = []  # row * dim + bucket, one entry per token occurrence
+    for i, t in enumerate(texts):
+        if not t:
+            continue
+        base = i * dim
+        for tok in t.split():
+            b = buckets.get(tok)
+            if b is None:
                 h = int.from_bytes(
                     hashlib.md5(tok.encode()).digest()[:8], "big"
                 )
-                vec[h % dim] += 1.0
-        n = math.sqrt(float(vec @ vec))
-        if n > 0:
-            vec /= n
-        out.append(vec.astype(np.float32))
-    return pd.Series(out)
+                b = buckets[tok] = h % dim
+            cells.append(base + b)
+    n = len(texts)
+    counts = np.bincount(
+        np.asarray(cells, dtype=np.int64), minlength=n * dim
+    ).reshape(n, dim).astype(np.float64)
+    norms = np.sqrt(np.einsum("ij,ij->i", counts, counts))[:, None]
+    np.divide(counts, norms, out=counts, where=norms > 0)
+    return pd.Series(list(counts.astype(np.float32)))
 
 
 class HashingEmbedder:

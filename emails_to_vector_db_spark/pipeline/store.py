@@ -10,25 +10,45 @@ Reference behavior replaced:
   the existing store on id first (SURVEY.md J4) — idempotent re-runs.
 - ``rag.py:65-90``  KNN search → operators.knn.knn_topk on the store.
 
-Scale notes: the anti-join's build side is the EXISTING store projected to
-its id column only — Catalyst broadcasts it while the id set is small and
-falls back to a shuffled sort-merge anti join once it isn't (Spark cannot
-broadcast the stream side of a left_anti join, so "broadcast the new
-batch" is not an available plan shape). The deduped batch is persisted
-before the row count so the upstream pipeline — including the embedding
-pandas_udf — executes exactly once per append.
+Scale notes: an append to a non-empty store runs two Spark jobs — the
+broadcast of the EXISTING store's id column for the left_anti join, then
+the write, whose ``observe()`` counts the rows written, so the upstream
+pipeline (including the embedding pandas_udf) runs exactly once. The
+first append runs only the write. Catalyst broadcasts the id side while
+it is small and falls back to a shuffled sort-merge anti join once it
+isn't (Spark cannot broadcast the stream side of a left_anti join, so
+"broadcast the new batch" is not an available plan shape).
+
+No store operation infers a schema: each data directory records its
+schema as ``StructType`` JSON in ``_schema.json`` (hidden from Spark's
+file listing by the leading underscore), written from ``batch.schema``
+at the first append and by ``compact()`` into each new version. Every
+read — data, snapshots, tombstones — passes it to ``spark.read.schema``,
+and ``exists()`` is a listing check. A store without a record (written
+before it existed, or a crash between the first write's commit and the
+record) infers once, and that read records the schema.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from emails_to_vector_db_spark.operators.knn import knn_topk
 from emails_to_vector_db_spark.pipeline.embedder import Embedder
+
+
+SCHEMA_FILE = "_schema.json"
+
+
+def _columns(schema: StructType) -> dict[str, str]:
+    return {f.name: f.dataType.simpleString() for f in schema.fields}
 
 
 class EmbeddingStore:
@@ -61,22 +81,34 @@ class EmbeddingStore:
         return self.path
 
     def exists(self) -> bool:
+        """Whether the live data directory holds a committed part file —
+        a driver-side listing, no Spark job."""
+        return _has_parts(self._data_dir())
+
+    def _schema(
+        self, data_dir: str, files: list[str] | None = None
+    ) -> StructType:
+        """The schema recorded in ``data_dir``; without a record (a store
+        written before records existed) infer it once from the data and
+        record it."""
         try:
-            self.spark.read.parquet(self._data_dir()).schema
-            return True
-        except Exception:
-            return False
+            with open(os.path.join(data_dir, SCHEMA_FILE)) as fh:
+                return StructType.fromJson(json.load(fh))
+        except FileNotFoundError:
+            pass
+        schema = self.spark.read.parquet(*(files or [data_dir])).schema
+        _record_schema(data_dir, schema)
+        return schema
 
     def _tombstone_dir(self) -> str:
         return os.path.join(self.path, "_tombstones")
 
     def _tombstones(self) -> DataFrame | None:
         d = self._tombstone_dir()
-        if not os.path.isdir(d) or not any(
-            f.endswith(".parquet") for f in os.listdir(d)
-        ):
+        if not _has_parts(d):
             return None
-        return self.spark.read.parquet(d)
+        id_field = self._schema(self._data_dir())[self.id_col]
+        return self.spark.read.schema(StructType([id_field])).parquet(d)
 
     def _manifest_dir(self) -> str:
         return os.path.join(self.path, "_manifests")
@@ -127,8 +159,10 @@ class EmbeddingStore:
                     for line in fh
                     if line.strip()
                 ]
-            return self.spark.read.parquet(*files)
-        df = self.spark.read.parquet(self._data_dir())
+            schema = self._schema(vdir, files)
+            return self.spark.read.schema(schema).parquet(*files)
+        data_dir = self._data_dir()
+        df = self.spark.read.schema(self._schema(data_dir)).parquet(data_dir)
         ts = self._tombstones()
         if ts is not None:
             # logical deletion: tombstoned ids are filtered at read time
@@ -157,9 +191,8 @@ class EmbeddingStore:
         # string-keyed store write a long-typed tombstone whose
         # anti-join silently casts (or breaks parquet schema merge
         # against an earlier string-typed tombstone file)
-        id_type = dict(self.spark.read.parquet(self._data_dir()).dtypes)[
-            self.id_col
-        ]
+        id_field = self._schema(self._data_dir())[self.id_col]
+        id_type = id_field.dataType.simpleString()
         df = self.spark.createDataFrame(
             [(str(i),) for i in ids], f"{self.id_col} string"
         ).select(F.col(self.id_col).cast(id_type))
@@ -180,7 +213,22 @@ class EmbeddingStore:
     def append(self, batch: DataFrame, dedup: bool = True) -> int:
         """Append (id, content, embedding) rows; with dedup=True, rows whose
         id already exists are dropped first (left_anti) — the idempotence
-        the reference lacks. Returns rows written."""
+        the reference lacks. Returns rows written.
+
+        The batch's column names and types must match the store's
+        recorded schema: every read applies that record, so a mismatched
+        file would be misread. The check is driver-side and raises
+        before anything is written."""
+        data_dir = self._data_dir()
+        exists = _has_parts(data_dir)
+        if exists:
+            want = _columns(self._schema(data_dir))
+            got = _columns(batch.schema)
+            if got != want:
+                raise ValueError(
+                    f"append: batch columns {got} do not match the "
+                    f"store's schema {want}; nothing was written"
+                )
         ts = self._tombstones()
         if ts is not None:
             # a tombstone would silently swallow a re-appended id (the
@@ -192,7 +240,7 @@ class EmbeddingStore:
                     f"append contains {n_dead} tombstoned id(s); run "
                     "compact() to apply deletions before re-using ids"
                 )
-        if dedup and self.exists():
+        if dedup and exists:
             existing = self.read().select(self.id_col)
             batch = batch.join(existing, self.id_col, "left_anti")
         # observe(): the row count rides the WRITE job itself — one job,
@@ -205,7 +253,11 @@ class EmbeddingStore:
 
         obs = Observation()
         batch = batch.observe(obs, F.count(F.lit(1)).alias("n"))
-        batch.write.mode("append").parquet(self._data_dir())
+        batch.write.mode("append").parquet(data_dir)
+        if not exists:
+            # first append: the record comes from the batch, no job (a
+            # Parquet read makes every field nullable, given or inferred)
+            _record_schema(data_dir, batch.schema)
         return int(obs.get["n"])
 
     def compact(
@@ -247,6 +299,7 @@ class EmbeddingStore:
         df.repartition(target_partitions).write.mode("overwrite").parquet(
             new_dir
         )
+        _record_schema(new_dir, df.schema)
         # snapshot manifest: the part files THIS compaction wrote —
         # read(version=...) opens exactly these, so later appends into
         # the live directory can't leak into the frozen snapshot.
@@ -315,6 +368,29 @@ class EmbeddingStore:
             id_col=self.id_col,
             metric=metric,
         )
+
+
+def _has_parts(d: str) -> bool:
+    """Whether ``d`` holds a visible Parquet part file (Spark skips names
+    starting with ``_`` or ``.``)."""
+    return os.path.isdir(d) and any(
+        e.endswith(".parquet") and not e.startswith(("_", "."))
+        for e in os.listdir(d)
+    )
+
+
+def _record_schema(data_dir: str, schema: StructType) -> None:
+    """Write ``data_dir``'s schema record: temp file, then an atomic
+    ``os.replace``, so a reader sees the whole record or none."""
+    path = os.path.join(data_dir, SCHEMA_FILE)
+    tmp = f"{path}.{uuid.uuid4().hex}"
+    try:
+        with open(tmp, "w") as fh:
+            fh.write(schema.json())
+        os.replace(tmp, path)
+    finally:
+        if os.path.exists(tmp):
+            os.remove(tmp)
 
 
 def embed_and_store(

@@ -309,14 +309,8 @@ class EmbeddingStore:
         parts = sorted(
             e for e in os.listdir(new_dir) if e.endswith(".parquet")
         )
-        mtmp = self._manifest_path(version) + ".tmp"
-        with open(mtmp, "w") as fh:
-            fh.write("\n".join(parts))
-        os.replace(mtmp, self._manifest_path(version))
-        tmp = self._pointer() + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write(f"v{version}")
-        os.replace(tmp, self._pointer())  # atomic commit point
+        _atomic_write(self._manifest_path(version), "\n".join(parts))
+        _atomic_write(self._pointer(), f"v{version}")  # the commit point
         kept = {f"v{n}" for n in self.versions()[-retain:]} | {f"v{version}"}
         self._prune_manifests(kept)
         self._sweep(keep=kept)
@@ -379,18 +373,23 @@ def _has_parts(d: str) -> bool:
     )
 
 
-def _record_schema(data_dir: str, schema: StructType) -> None:
-    """Write ``data_dir``'s schema record: temp file, then an atomic
-    ``os.replace``, so a reader sees the whole record or none."""
-    path = os.path.join(data_dir, SCHEMA_FILE)
+def _atomic_write(path: str, text: str) -> None:
+    """Write ``text`` to ``path`` through a uniquely named temp file and
+    one ``os.replace``, so a reader sees the old content or the new,
+    never a part, and concurrent writers never share a temp file."""
     tmp = f"{path}.{uuid.uuid4().hex}"
     try:
         with open(tmp, "w") as fh:
-            fh.write(schema.json())
+            fh.write(text)
         os.replace(tmp, path)
     finally:
         if os.path.exists(tmp):
             os.remove(tmp)
+
+
+def _record_schema(data_dir: str, schema: StructType) -> None:
+    """Write ``data_dir``'s schema record."""
+    _atomic_write(os.path.join(data_dir, SCHEMA_FILE), schema.json())
 
 
 def embed_and_store(

@@ -635,14 +635,13 @@ def streaming_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the store itself (fp-keyed parquet), not executor memory, and
     each micro-batch costs one fingerprint scan + one anti-join."""
     import os
-    import shutil
 
     from emails_to_vector_db_spark.functions import text as TX
     from emails_to_vector_db_spark.pipeline.store import EmbeddingStore
+    from emails_to_vector_db_spark.streaming.run import drain_files, run_dir
 
     landing = _stream_dedup_landing(sf_dir)
-    work = landing.rstrip("/") + "__run"
-    shutil.rmtree(work, ignore_errors=True)  # deterministic re-runs
+    work = run_dir(landing, "dedup")
     store = EmbeddingStore(spark, os.path.join(work, "store"), id_col="fp")
 
     def apply(batch: DataFrame, _batch_id: int) -> None:
@@ -653,16 +652,7 @@ def streaming_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         store.append(kept)
 
-    q = (
-        spark.readStream.schema("doc_id bigint, text string")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(landing)
-        .writeStream.foreachBatch(apply)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
+    drain_files(spark, landing, "doc_id bigint, text string", apply, work)
     return store.read().select("fp", "keep_id")
 
 

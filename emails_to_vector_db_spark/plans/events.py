@@ -10,8 +10,6 @@ epoch values agree exactly.
 
 from __future__ import annotations
 
-import contextlib
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -19,21 +17,6 @@ from emails_to_vector_db_spark.plans.registry import register
 from emails_to_vector_db_spark.sources.tables import load_table, table_path
 from emails_to_vector_db_spark.sources.warehouse import publish_landing
 
-
-@contextlib.contextmanager
-def _stream_partitions(spark: SparkSession, n: int = 32):
-    """Cap shuffle partitions for the duration of a bounded streaming run:
-    state-store count == shuffle partitions, and a vanilla driver session
-    defaults to 200 — 6× more state tasks than cores for fixture-sized
-    micro-batches. Restored afterwards so batch queries keep the session
-    setting. (A real deployment sets this per-job at submit time.)"""
-    key = "spark.sql.shuffle.partitions"
-    old = spark.conf.get(key)
-    spark.conf.set(key, str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)
 
 _HOURLY_ORACLE = """
 SELECT epoch(date_trunc('hour', ts))::BIGINT AS hour_epoch,
@@ -136,19 +119,11 @@ def streaming_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_events_stream,
         tumbling_counts,
     )
+    from emails_to_vector_db_spark.streaming.run import collect
 
-    name = "stream_hourly_counts_tbl"
-    with _stream_partitions(spark):
-        stream = tumbling_counts(read_events_stream(spark, sf_dir))
-        q = (
-            stream.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    return spark.table(name)
+    return collect(
+        spark, lambda s: tumbling_counts(read_events_stream(s, sf_dir)), "complete"
+    )
 
 
 _STREAM_SESSION_ORACLE = """
@@ -181,20 +156,12 @@ def streaming_session_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_events_stream,
         session_counts,
     )
+    from emails_to_vector_db_spark.streaming.run import collect
 
-    name = "stream_session_counts_tbl"
-    with _stream_partitions(spark):
-        stream = session_counts(read_events_stream(spark, sf_dir))
-        q = (
-            stream.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
     return (
-        spark.table(name)
+        collect(
+            spark, lambda s: session_counts(read_events_stream(s, sf_dir)), "complete"
+        )
         .groupBy("user_id")
         .agg(
             F.count(F.lit(1)).alias("n_sessions"),
@@ -287,20 +254,14 @@ def streaming_click_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame
         click_purchase_stream_join,
         read_events_stream,
     )
+    from emails_to_vector_db_spark.streaming.run import collect
 
-    name = "stream_click_purchase_tbl"
-    with _stream_partitions(spark):
-        joined = click_purchase_stream_join(read_events_stream(spark, sf_dir))
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
     return (
-        spark.table(name)
+        collect(
+            spark,
+            lambda s: click_purchase_stream_join(read_events_stream(s, sf_dir)),
+            "append",
+        )
         .groupBy(F.col("c_user").alias("user_id"))
         .agg(F.count(F.lit(1)).alias("n_pairs"))
     )
@@ -1153,11 +1114,11 @@ def streaming_sprt_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix-sum — the streaming experimentation monitor, hash-checked."""
     import math
     import os
-    import shutil
+
+    from emails_to_vector_db_spark.streaming.run import drain_files, run_dir
 
     landing = _stream_sprt_landing(sf_dir)
-    work = landing.rstrip("/") + "__sprt_run"
-    shutil.rmtree(work, ignore_errors=True)  # deterministic re-runs
+    work = run_dir(landing, "sprt")
     counts_dir = os.path.join(work, "counts")
 
     conv = F.when(F.col("event_type") == "purchase", 1).otherwise(0)
@@ -1187,18 +1148,10 @@ def streaming_sprt_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(counts_dir)
         )
 
-    q = (
-        spark.readStream.schema(
-            "event_id bigint, user_id bigint, event_type string"
-        )
-        .option("maxFilesPerTrigger", "1")
-        .parquet(landing)
-        .writeStream.foreachBatch(apply)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    drain_files(
+        spark, landing, "event_id bigint, user_id bigint, event_type string",
+        apply, work,
     )
-    q.awaitTermination(300)
 
     counts = spark.read.parquet(counts_dir)
     p0 = F.broadcast(

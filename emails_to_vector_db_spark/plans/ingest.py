@@ -445,41 +445,30 @@ def email_datasource_stream_stats(spark: SparkSession, sf_dir: str) -> DataFrame
     bounded micro-batches) — the full incremental-IMAP shape: poll,
     advance the watermark, parse, extract. The bounded stream must
     deliver exactly the corpus the batch connector scans, so the SAME
-    sequential-reference oracle hash-checks it."""
-    import time
-
+    sequential-reference oracle hash-checks it. The stream is polled
+    until every email has arrived: an ``availableNow`` run of this
+    Python stream reader ends after its first batches."""
     from emails_to_vector_db_spark.sources.email_datasource import (
         EmailCorpusDataSource,
     )
     from emails_to_vector_db_spark.sources.emails import extract_plain_text
     from emails_to_vector_db_spark.sources.fixtures import FIXTURE_EMAILS_N
+    from emails_to_vector_db_spark.streaming.run import collect
 
-    try:
-        spark.dataSource.register(EmailCorpusDataSource)
-    except Exception:
-        pass  # already registered in this session
-    name = "email_stream_stats_tbl"
-    raw = (
-        spark.readStream.format("email_corpus")
-        .option("n", str(FIXTURE_EMAILS_N))
-        .option("batchSize", "16")
-        .load()
-    )
-    q = (
-        raw.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .start()
-    )
-    try:
-        deadline = time.time() + 240
-        while time.time() < deadline:
-            if spark.table(name).count() >= FIXTURE_EMAILS_N:
-                break
-            time.sleep(0.5)
-    finally:
-        q.stop()
-    texts = extract_plain_text(spark.table(name))
+    def emails(s: SparkSession) -> DataFrame:
+        try:
+            s.dataSource.register(EmailCorpusDataSource)
+        except Exception:
+            pass  # already registered in this session
+        return (
+            s.readStream.format("email_corpus")
+            .option("n", str(FIXTURE_EMAILS_N))
+            .option("batchSize", "16")
+            .load()
+        )
+
+    raw = collect(spark, emails, "append", rows=FIXTURE_EMAILS_N)
+    texts = extract_plain_text(raw)
     return texts.select(
         "msg_id",
         F.length("text").alias("n_chars"),

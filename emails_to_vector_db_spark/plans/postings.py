@@ -677,6 +677,8 @@ def _run_stream_postings(
     LOUDLY: the superseded store is named on stderr. A stream that does
     not drain publishes nothing. tests/test_postings_store.py pins both
     the warm-skip and the loud re-stream."""
+    from emails_to_vector_db_spark.streaming.run import drain_files
+
     landing = _stream_pst_landing(sf_dir)
     srcs = [table_path(sf_dir, "documents")]
     kind = f"stream_pst_run_v{_STREAM_PST_VERSION}"
@@ -725,23 +727,8 @@ def _run_stream_postings(
             finally:
                 pos.unpersist()
 
-        q = (
-            spark.readStream.schema("doc_id bigint, text string")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(landing)
-            .writeStream.foreachBatch(apply)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            # r9 ADVICE: on timeout foreachBatch may still be appending —
-            # publishing now would serve a silently partial census
-            q.stop()
-            raise RuntimeError(
-                "streaming postings ingest: stream did not drain within "
-                "300s; refusing to publish a partially-appended store"
-            )
+        # a stream that times out raises, so publish discards the build
+        drain_files(spark, landing, "doc_id bigint, text string", apply, work)
 
     work = publish(kind, srcs, stream)
     return os.path.join(work, "pst_store"), os.path.join(work, "pos_store")

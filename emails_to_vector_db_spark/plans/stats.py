@@ -425,13 +425,12 @@ def streaming_cms_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     frequency sketches roll up without ever re-reading history: the
     merged state is ≤ depth×width rows no matter the corpus."""
     import os
-    import shutil
 
     from emails_to_vector_db_spark.plans.corpus import _stream_dedup_landing
+    from emails_to_vector_db_spark.streaming.run import drain_files, run_dir
 
     landing = _stream_dedup_landing(sf_dir)
-    work = landing.rstrip("/") + "__cms_run"
-    shutil.rmtree(work, ignore_errors=True)  # deterministic re-runs
+    work = run_dir(landing, "cms")
     sketch_dir = os.path.join(work, "sketch")
 
     def cell(j: int) -> F.Column:
@@ -469,16 +468,7 @@ def streaming_cms_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         batch_cms.write.mode("append").parquet(sketch_dir)
 
-    q = (
-        spark.readStream.schema("doc_id bigint, text string")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(landing)
-        .writeStream.foreachBatch(apply)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
+    drain_files(spark, landing, "doc_id bigint, text string", apply, work)
     return (
         spark.read.parquet(sketch_dir)
         .groupBy("j", "cell")
@@ -1066,11 +1056,11 @@ def streaming_psi_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-checked, not rows-only (the streaming_cms_merge discipline
     applied to the drift family)."""
     import os
-    import shutil
+
+    from emails_to_vector_db_spark.streaming.run import drain_files, run_dir
 
     landing = _stream_events_landing(sf_dir)
-    work = landing.rstrip("/") + "__psi_run"
-    shutil.rmtree(work, ignore_errors=True)  # deterministic re-runs
+    work = run_dir(landing, "psi")
     hist_dir = os.path.join(work, "hist")
 
     bin_col = F.least(
@@ -1090,16 +1080,7 @@ def streaming_psi_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(hist_dir)
         )
 
-    q = (
-        spark.readStream.schema("event_id bigint, value double")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(landing)
-        .writeStream.foreachBatch(apply)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
+    drain_files(spark, landing, "event_id bigint, value double", apply, work)
 
     hist = spark.read.parquet(hist_dir)
     grid = spark.range(3).select(
@@ -3674,13 +3655,12 @@ def streaming_kmv_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     state rolling up without re-reading history: merged state is ≤ K
     rows no matter the corpus, and unions stay ≤ K by construction."""
     import os
-    import shutil
 
     from emails_to_vector_db_spark.plans.corpus import _stream_dedup_landing
+    from emails_to_vector_db_spark.streaming.run import drain_files, run_dir
 
     landing = _stream_dedup_landing(sf_dir)
-    work = landing.rstrip("/") + "__kmv_run"
-    shutil.rmtree(work, ignore_errors=True)  # deterministic re-runs
+    work = run_dir(landing, "kmv")
     state_dir = os.path.join(work, "state")
 
     def apply(batch: DataFrame, _batch_id: int) -> None:
@@ -3701,16 +3681,7 @@ def streaming_kmv_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         batch_state.write.mode("append").parquet(state_dir)
 
-    q = (
-        spark.readStream.schema("doc_id bigint, text string")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(landing)
-        .writeStream.foreachBatch(apply)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
+    drain_files(spark, landing, "doc_id bigint, text string", apply, work)
     merged = (
         spark.read.parquet(state_dir)
         .select("h")

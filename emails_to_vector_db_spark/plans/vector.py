@@ -1132,16 +1132,15 @@ def streaming_ivf_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     load, so reads and writes can never disagree about bucketing.
     """
     import os
-    import shutil
 
     from emails_to_vector_db_spark.operators.ivf import (
         assign_centroids_arrow,
     )
+    from emails_to_vector_db_spark.streaming.run import drain_files, run_dir
 
     cents = _ivf_quantizer(sf_dir)
     landing = _stream_ivf_landing(sf_dir)
-    work = landing.rstrip("/") + "__run"
-    shutil.rmtree(work, ignore_errors=True)  # deterministic re-runs
+    work = run_dir(landing, "ivf")
     index_dir = os.path.join(work, "ivf_store")
 
     def apply(batch: DataFrame, _batch_id: int) -> None:
@@ -1151,16 +1150,7 @@ def streaming_ivf_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         assigned = assign_centroids_arrow(batch, cents)
         assigned.write.mode("append").partitionBy("cid").parquet(index_dir)
 
-    q = (
-        spark.readStream.schema("vec_id bigint, embedding array<float>")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(landing)
-        .writeStream.foreachBatch(apply)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
+    drain_files(spark, landing, "vec_id bigint, embedding array<float>", apply, work)
     return (
         spark.read.parquet(index_dir)
         .groupBy("cid")

@@ -65,7 +65,7 @@ def superseded(kind: str, sources: Sequence[str]) -> list[str]:
     """Published ``kind`` directories of the same sources at an older
     state (the sources changed since they were built). Only exact
     ``<corpus>_<state>`` names match: a sibling such as a streaming
-    query's ``<name>__run`` work dir is never listed."""
+    run's ``<name>__<tag>.<pid>.<rand>`` work dir is never listed."""
     parent, name = os.path.split(artifact_path(kind, sources))
     own = re.compile(re.escape(name.split("_")[0]) + r"_[0-9a-f]{10}")
     try:
@@ -89,6 +89,21 @@ def _alive(pid: int) -> bool:
     return True
 
 
+_PID_DIR = re.compile(r".+\.(\d+)\.[a-z0-9_]{8}")
+
+
+def pid_dir(parent: str, prefix: str) -> str:
+    """Make a fresh directory ``<prefix>.<pid>.<rand>`` in ``parent``,
+    first removing every such directory there whose process is dead
+    (a crashed build's temp dir, a killed stream's run dir)."""
+    os.makedirs(parent, exist_ok=True)
+    for e in os.listdir(parent):
+        m = _PID_DIR.fullmatch(e)
+        if m and not _alive(int(m.group(1))):
+            shutil.rmtree(os.path.join(parent, e), ignore_errors=True)
+    return tempfile.mkdtemp(prefix=f"{prefix}.{os.getpid()}.", dir=parent)
+
+
 def publish(kind: str, sources: Sequence[str], build: Callable[[str], Any]) -> str:
     """Return the directory holding ``kind`` built from ``sources``,
     calling ``build(tmp_dir)`` first unless it is already published.
@@ -108,12 +123,7 @@ def publish(kind: str, sources: Sequence[str], build: Callable[[str], Any]) -> s
     if os.path.isdir(path):
         return path
     parent, name = os.path.split(path)
-    os.makedirs(parent, exist_ok=True)
-    for e in os.listdir(parent):  # .<name>.<pid>.<rand>: a temp dir
-        part = e.split(".")
-        if len(part) == 4 and part[2].isdigit() and not _alive(int(part[2])):
-            shutil.rmtree(os.path.join(parent, e), ignore_errors=True)
-    tmp = tempfile.mkdtemp(prefix=f".{name}.{os.getpid()}.", dir=parent)
+    tmp = pid_dir(parent, "." + name)
     try:
         build(tmp)
         os.chmod(tmp, 0o777 & ~_UMASK)

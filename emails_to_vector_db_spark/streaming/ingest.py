@@ -222,6 +222,7 @@ def stream_merge_upsert(
     v{n+1} from the same inputs (idempotent). Readers follow _LATEST."""
     import os
 
+    from emails_to_vector_db_spark.pipeline.store import _atomic_write
     from emails_to_vector_db_spark.sources.warehouse import merge_upsert
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -238,10 +239,7 @@ def stream_merge_upsert(
         merged = merge_upsert(existing, batch_df, key=key)
         new_dir = os.path.join(table_dir, f"v{version}")
         merged.write.mode("overwrite").parquet(new_dir)
-        tmp = pointer + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write(f"v{version}")
-        os.replace(tmp, pointer)  # atomic pointer flip
+        _atomic_write(pointer, f"v{version}")  # the pointer flip
 
     return (
         updates_stream.writeStream.foreachBatch(apply_batch)

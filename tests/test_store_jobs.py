@@ -20,6 +20,7 @@ from emails_to_vector_db_spark.pipeline.embedder import HashingEmbedder
 from emails_to_vector_db_spark.pipeline.store import (
     SCHEMA_FILE,
     EmbeddingStore,
+    _atomic_write,
     embed_and_store,
 )
 
@@ -175,3 +176,30 @@ def test_other_process_writes_are_seen_by_next_search(spark, tmp_path):
         timeout=300,
     )
     assert _search_ids(store, probe) == list(range(3, 30))
+
+
+def test_concurrent_atomic_writes_never_share_a_temp_file(tmp_path):
+    """The manifest, ``_LATEST`` and ``_schema.json`` writes go through
+    one uniquely named temp file each: racing writers of one path all
+    commit whole values, and none is left behind."""
+    import threading
+
+    path = str(tmp_path / "_LATEST")
+    errors = []
+
+    def writer(i: int) -> None:
+        try:
+            for n in range(200):
+                _atomic_write(path, f"v{i}-{n}")
+        except OSError as e:
+            errors.append(e)
+
+    threads = [threading.Thread(target=writer, args=(i,)) for i in range(4)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert not errors
+    with open(path) as fh:
+        assert fh.read() in {f"v{i}-199" for i in range(4)}
+    assert os.listdir(tmp_path) == ["_LATEST"]
